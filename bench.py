@@ -18,7 +18,8 @@ the per-run "queries" map is the raw reading.
 The headline metric follows BASELINE.json: rolled-up points/sec across
 retention tiers (second/minute/hour/day) on the synthetic transcripts table
 (input_hint shape), measured as total tier output rows / wall-clock for the
-full cascade. Supporting queries time the engine's other headline operators
+one-action GROUPING SETS plan, written to a ``noop`` sink (warmup, then
+best-of-3). Supporting queries time the engine's other headline operators
 on the driver's sf tables. Scaling-efficiency evidence (local[8] vs
 local[32]) is produced separately by scripts/bench_scaling.py into
 BENCH/BASELINE.md.
@@ -40,7 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from tablecloth_time_spark.functions import timeops as T  # noqa: E402
 from tablecloth_time_spark.operators.gapfill import resample_to_regular_grid  # noqa: E402
 from tablecloth_time_spark.operators.rolling import rolling  # noqa: E402
-from tablecloth_time_spark.operators.rollup import rollup, rollup_cascade  # noqa: E402
+from tablecloth_time_spark.operators.rollup import rollup  # noqa: E402
 from tablecloth_time_spark.operators.shift import add_lags  # noqa: E402
 from tablecloth_time_spark.operators.slice import slice_time  # noqa: E402
 from tablecloth_time_spark.session import get_session  # noqa: E402
@@ -83,46 +84,11 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    from functools import reduce
-
-    from tablecloth_time_spark.operators.rollup import rollup_tiers_long
-
-    def all_tier_points(tiers_dict):
-        counts = reduce(
-            lambda a, b: a.unionAll(b),
-            [df.groupBy().count() for df in tiers_dict.values()],
-        )
-        return counts.agg(F.sum("count")).collect()[0][0]
-
-    # HEADLINE: every retention tier in ONE grouping-sets pass (Expand +
-    # one shuffle — see PLANS.md). This is the engine's fastest shape for
-    # "all tiers in one action"; every output row is one tier point.
-    # One untimed warmup run amortizes whole-stage-codegen/JIT compilation
-    # — at production scale those are a fixed cost on a minutes-long job,
-    # and the steady-state rate is what projects to 100 TB.
-    def headline():
-        return rollup_tiers_long(
-            transcripts, ["conv_id"], "ts", TRANSCRIPT_AGGS,
-            order_cols=["ts", "turn_idx"],
-        ).count()
-
-    headline()
-    cascade_sec = float("inf")
-    for _ in range(3):  # best-of-3, same rationale as timed()
-        t0 = time.perf_counter()
-        total_points = headline()
-        cascade_sec = min(cascade_sec, time.perf_counter() - t0)
-    timings["rollup_tiers_grouping_sets"] = round(cascade_sec, 3)
-
-    # r01-comparable: the cached-partial cascade (tiers materialized
-    # independently; the continuous-aggregate maintenance shape)
-    t0 = time.perf_counter()
-    tiers = rollup_cascade(
-        transcripts, ["conv_id"], "ts", TRANSCRIPT_AGGS,
-        order_cols=["ts", "turn_idx"], salt=0,
+    from tablecloth_time_spark.operators.rollup import (
+        cascade_partials,
+        finalize_partials,
+        rollup_tiers_long,
     )
-    assert all_tier_points(tiers) == total_points
-    timings["rollup_tiers_transcripts"] = round(time.perf_counter() - t0, 3)
 
     def timed(name, fn, trials: int = 3):
         # best-of-N: same-binary wall clock on this host swings up to ~2x
@@ -134,6 +100,42 @@ def main() -> None:
             fn()
             best = min(best, time.perf_counter() - t)
         timings[name] = round(best, 3)
+
+    keys, order = ["conv_id"], ["ts", "turn_idx"]
+
+    def noop(df):
+        # a sink that forces every output column; a .count() lets Catalyst
+        # prune the aggregate columns and times a cheaper plan
+        df.write.format("noop").mode("overwrite").save()
+
+    # Both tier plans get one untimed warmup run, which amortizes
+    # whole-stage-codegen/JIT compilation (a fixed cost on a minutes-long
+    # production job), then best-of-3 to the noop sink.
+    # HEADLINE: every retention tier in ONE grouping-sets pass (Expand +
+    # one shuffle — see PLANS.md), the one-action plan; every output row
+    # is one tier point.
+    long_tiers = rollup_tiers_long(
+        transcripts, keys, "ts", TRANSCRIPT_AGGS, order_cols=order
+    )
+    noop(long_tiers)
+    timed("rollup_tiers_grouping_sets", lambda: noop(long_tiers))
+    headline_sec = timings["rollup_tiers_grouping_sets"]
+    total_points = long_tiers.count()
+
+    # the cached-partial cascade with each tier written by its own action:
+    # the per-tier plan (rollup_cascade = finalize_partials over
+    # cascade_partials). The finest partial is unpersisted after every run
+    # so the next run recomputes it rather than reading a warm cache.
+    def cascade_tier_writes():
+        partials = cascade_partials(
+            transcripts, keys, "ts", TRANSCRIPT_AGGS, order_cols=order
+        )
+        for p in partials.values():
+            noop(finalize_partials(p, keys, TRANSCRIPT_AGGS))
+        next(iter(partials.values())).unpersist()
+
+    cascade_tier_writes()
+    timed("rollup_tiers_transcripts", cascade_tier_writes)
 
     timed(
         "rollup_hourly_events",
@@ -1001,7 +1003,7 @@ def main() -> None:
         lambda: cosine_near_dup_pairs(emb, dim=64, threshold=0.9).count(),
     )
 
-    points_per_sec = total_points / cascade_sec if cascade_sec > 0 else 0.0
+    points_per_sec = total_points / headline_sec if headline_sec > 0 else 0.0
 
     # Round-best ledger: same-binary wall clock swings up to ~2x under
     # invisible host contention, so cross-round per-query comparisons must

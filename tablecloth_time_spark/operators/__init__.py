@@ -14,7 +14,6 @@ from tablecloth_time_spark.operators.rollup import (  # noqa: F401
     ohlc,
     rollup,
     rollup_cascade,
-    rollup_multi,
     rollup_tiers_long,
 )
 from tablecloth_time_spark.operators.counters import (  # noqa: F401

@@ -9,14 +9,21 @@ that composition, made distributed and skew-safe:
 - every aggregate is kept in a MERGEABLE partial form (count, sum, min, max,
   first/last as lexicographic min/max over an order struct, avg as
   (sum, count)), so tiers cascade: second -> minute -> hour -> day each
-  re-merge the tier below instead of re-scanning raw data — at 100 TB the
-  raw table is read ONCE for all tiers;
+  re-merge the finest partial instead of re-scanning raw data — at 100 TB
+  the raw table is read ONCE for all tiers;
 - optional explicit salting splits a mega-series (conv_id with 10^8 turns)
   across ``salt`` sub-groups before the final merge (two-phase partial/final
   aggregation). Spark's map-side partial hash aggregation already bounds
   groupBy skew for built-in aggs; the explicit salt stage exists for the
   paths where partials can't combine map-side (e.g. feeding applyInPandas
   codecs) and as the north-star-mandated explicit strategy.
+
+Plans are built from three phases: :func:`partial_rollup`,
+:func:`merge_partials` (optionally re-bucketed coarser) and
+:func:`finalize_partials`. Of the two multi-tier plans, use
+:func:`rollup_cascade` when each tier is its own action (per-tier writes,
+continuous refresh) and :func:`rollup_tiers_long` when one action consumes
+every tier (measurements in PLANS.md).
 
 Aggregate spec format: ``{output_name: (kind, source_col)}`` with kinds
 ``count | sum | min | max | avg | first | last``. first/last order by the
@@ -141,7 +148,7 @@ def rollup(
 ) -> DataFrame:
     """Single-tier rollup: groupBy(keys + time bucket) with mergeable aggs.
 
-    ``salt > 0`` forces explicit two-phase aggregation: a first groupBy on
+    ``salt > 1`` forces explicit two-phase aggregation: a first groupBy on
     (keys, bucket, salt_id) computes partials, a second merges them — the
     mega-thread skew strategy. With salt=0 Spark's built-in partial/final
     hash aggregation handles the two phases implicitly.
@@ -155,20 +162,10 @@ def rollup(
     compute each zoned grain from raw data with its own rollup(zone=...)
     call instead.
     """
-    specs = _parse_aggs(aggs)
-    order_cols = order_cols or [ts_col]
-    bucket = down_to_nearest(ts_col, interval, unit, zone=zone).alias(bucket_col)
-
-    partial_exprs = [e for s in specs for e in s.partial_exprs(order_cols)]
-    if salt and salt > 1:
-        salt_id = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
-        partial = df.groupBy(*keys, bucket, salt_id.alias("__salt")).agg(*partial_exprs)
-        merged = partial.groupBy(*keys, bucket_col).agg(
-            *[e for s in specs for e in s.merge_exprs()]
-        )
-    else:
-        merged = df.groupBy(*keys, bucket).agg(*partial_exprs)
-    return merged.select(*keys, bucket_col, *[s.final_expr() for s in specs])
+    partial = _partial(
+        df, keys, ts_col, interval, unit, aggs, order_cols, salt, bucket_col, zone
+    )
+    return finalize_partials(partial, keys, aggs, bucket_col)
 
 
 def hopping_rollup(
@@ -311,54 +308,20 @@ def rollup_cascade(
     salt: int = 0,
     bucket_col: str = BUCKET_COL,
 ) -> dict[str, DataFrame]:
-    """Cascading multi-tier rollup: raw -> finest tier, then tier -> tier.
+    """{tier_name: finalized DataFrame} — :func:`cascade_partials`, finalized.
 
-    Each coarser tier merges the PARTIAL representation of the tier below
-    (sums of sums, min of struct-mins, ...), so raw data is scanned once.
-    Returns {tier_name: finalized DataFrame}. The finest tier's partial
-    frame is cached so coarser tiers and the finalized view share the scan.
+    The per-tier plan: use it when each tier is its own action (a write
+    per tier). On four tier writes plus minute compression it beat a
+    cached GROUPING SETS frame filtered per tier in 4 of 4 pairs, by ~7%
+    (PLANS.md). Zone-less: see :func:`rollup`.
     """
-    tiers = tiers or DEFAULT_TIERS
-    specs = _parse_aggs(aggs)
-    order_cols = order_cols or [ts_col]
-    items = sorted(
-        tiers.items(),
-        key=lambda kv: _bucket_width_ms(*kv[1]),
+    partials = cascade_partials(
+        df, keys, ts_col, aggs, tiers, order_cols, salt, bucket_col
     )
-
-    # finest tier: partial agg straight off the raw table
-    fi, fu = items[0][1]
-    fbucket = down_to_nearest(ts_col, fi, fu).alias(bucket_col)
-    partial_exprs = [e for s in specs for e in s.partial_exprs(order_cols)]
-    if salt and salt > 1:
-        salt_id = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
-        p0 = df.groupBy(*keys, fbucket, salt_id.alias("__salt")).agg(*partial_exprs)
-        partial = p0.groupBy(*keys, bucket_col).agg(
-            *[e for s in specs for e in s.merge_exprs()]
-        )
-    else:
-        partial = df.groupBy(*keys, fbucket).agg(*partial_exprs)
-    partial = partial.cache()
-
-    # every coarser tier re-merges the CACHED finest partial directly
-    # (sums of sums are associative, so finest -> day equals
-    # finest -> hour -> day). Chaining tier -> tier instead would make an
-    # all-tiers action recompute each intermediate merge once per coarser
-    # branch — Spark has no cross-branch common-subplan reuse beyond the
-    # explicit cache.
-    out: dict[str, DataFrame] = {}
-    for idx, (tier_name, (interval, unit)) in enumerate(items):
-        if idx == 0:
-            tier_partial = partial
-        else:
-            rebucket = down_to_nearest(bucket_col, interval, unit).alias(bucket_col)
-            tier_partial = partial.groupBy(*keys, rebucket).agg(
-                *[e for s in specs for e in s.merge_exprs()]
-            )
-        out[tier_name] = tier_partial.select(
-            *keys, bucket_col, *[s.final_expr() for s in specs]
-        )
-    return out
+    return {
+        name: finalize_partials(p, keys, aggs, bucket_col)
+        for name, p in partials.items()
+    }
 
 
 def rollup_tiers_long(
@@ -385,26 +348,21 @@ def rollup_tiers_long(
 
     Each input row expands once per tier (with that tier's bucket column),
     then a single partial/final hash aggregate computes every tier
-    simultaneously — no cache, no per-tier jobs, ~7x faster than the
-    cached cascade for the all-tiers-in-one-action case at sf0.1 (caching
-    the struct-heavy finest partial alone cost more than this entire plan;
-    see PLANS.md). Input columns are pruned to what the aggregation needs
-    BEFORE the Expand — every retained column is duplicated once per tier,
-    so an unused wide payload column (the raw text) would 4x expand cost.
+    simultaneously — no cache, no per-tier jobs. Input columns are pruned
+    to what the aggregation needs BEFORE the Expand — every retained
+    column is duplicated once per tier, so an unused wide payload column
+    (the raw text) would 4x expand cost.
 
     Map-side partial aggregation applies after the Expand, so shuffle
     volume ~= sum of the tiers' partial sizes — the bytes the cascade
     spreads across four Exchanges, in one.
 
-    Use THIS when consuming all tiers in one action (bench, batch export,
-    write-partitioned-by-tier); ``rollup_multi`` wraps it as a per-tier
-    dict (each dict entry is a filter BRANCH — materializing all of them
-    separately recomputes the pass per tier, so materialize the long frame
-    once instead); ``rollup_cascade`` when tiers are materialized
-    independently; ``partial_rollup``/``merge_partials`` for incremental
-    maintenance. Mega-key skew: Expand preserves the key distribution;
-    pair with AQE or pre-salt if one (key, finest-bucket) group is
-    degenerate.
+    The one-action plan (batch export, write-partitioned-by-tier): 5.4 s
+    and 6.3 s median on 493,924 turns to a ``noop`` sink, against 8.2 s
+    and 8.6 s for the cached cascade unioned in one action. Filtering it
+    per tier re-runs the whole Expand per filter — per-tier writes belong
+    to :func:`rollup_cascade`. Mega-key skew: Expand preserves the key
+    distribution; pair with AQE or pre-salt.
     """
     tiers = tiers or DEFAULT_TIERS
     specs = _parse_aggs(aggs)
@@ -448,34 +406,6 @@ def rollup_tiers_long(
     )
 
 
-def rollup_multi(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    aggs: dict[str, tuple[str, str]],
-    tiers: dict[str, tuple[int, str]] | None = None,
-    order_cols: list[str] | None = None,
-    bucket_col: str = BUCKET_COL,
-    zone: str | None = None,
-) -> dict[str, DataFrame]:
-    """Per-tier dict view over :func:`rollup_tiers_long`.
-
-    Each entry filters the one-pass long frame by tier. NOTE: the entries
-    share LINEAGE, not computation — materializing every tier separately
-    re-runs the pass per tier. For all-tiers-in-one-action, materialize
-    ``rollup_tiers_long`` once (or cache it) and filter the result.
-    """
-    tiers = tiers or DEFAULT_TIERS
-    long_df = rollup_tiers_long(
-        df, keys, ts_col, aggs, tiers, order_cols, bucket_col,
-        tier_col="__tier", zone=zone,
-    )
-    return {
-        name: long_df.filter(F.col("__tier") == name).drop("__tier")
-        for name in tiers
-    }
-
-
 # ---------------------------------------------------------------------------
 # partial-aggregation phases, exposed for incremental maintenance (plans/)
 # ---------------------------------------------------------------------------
@@ -497,12 +427,61 @@ def partial_rollup(
     min/max, first/last order-structs) so later increments merge exactly —
     never the finalized form, where avg/first/last would be unmergeable.
     """
+    return _partial(df, keys, ts_col, interval, unit, aggs, order_cols, 0, bucket_col)
+
+
+def _partial(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    interval: int,
+    unit: str,
+    aggs: dict[str, tuple[str, str]],
+    order_cols: list[str] | None,
+    salt: int,
+    bucket_col: str,
+    zone: str | None = None,
+) -> DataFrame:
+    """The raw -> partial step of every plan but GROUPING SETS; ``salt > 1``
+    adds a (keys, bucket, salt_id) groupBy merged on (keys, bucket)."""
     specs = _parse_aggs(aggs)
     order_cols = order_cols or [ts_col]
-    bucket = down_to_nearest(ts_col, interval, unit).alias(bucket_col)
-    return df.groupBy(*keys, bucket).agg(
-        *[e for s in specs for e in s.partial_exprs(order_cols)]
+    bucket = down_to_nearest(ts_col, interval, unit, zone=zone).alias(bucket_col)
+    exprs = [e for s in specs for e in s.partial_exprs(order_cols)]
+    if salt and salt > 1:
+        salt_id = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt))
+        salted = df.groupBy(*keys, bucket, salt_id.alias("__salt")).agg(*exprs)
+        return merge_partials(salted, keys, aggs, bucket_col)
+    return df.groupBy(*keys, bucket).agg(*exprs)
+
+
+def cascade_partials(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    aggs: dict[str, tuple[str, str]],
+    tiers: dict[str, tuple[int, str]] | None = None,
+    order_cols: list[str] | None = None,
+    salt: int = 0,
+    bucket_col: str = BUCKET_COL,
+) -> dict[str, DataFrame]:
+    """{tier_name: partial frame}, finest first: the finest partial off
+    ``df``, CACHED, then one ``merge_partials(rebucket=...)`` of that cache
+    per coarser tier. Merging the finest directly (finest -> day equals
+    finest -> hour -> day) keeps every tier one aggregate; chaining tiers
+    would recompute each intermediate merge per coarser branch. The finest
+    entry IS the cached frame: unpersist it when done."""
+    items = sorted(
+        (tiers or DEFAULT_TIERS).items(), key=lambda kv: _bucket_width_ms(*kv[1])
     )
+    (finest, (interval, unit)), coarser = items[0], items[1:]
+    partial = _partial(
+        df, keys, ts_col, interval, unit, aggs, order_cols, salt, bucket_col
+    ).cache()
+    out = {finest: partial}
+    for name, rebucket in coarser:
+        out[name] = merge_partials(partial, keys, aggs, bucket_col, rebucket=rebucket)
+    return out
 
 
 def merge_partials(

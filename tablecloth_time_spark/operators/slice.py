@@ -129,14 +129,14 @@ def add_row_index(
     tie-breaking column for exactness.
 
     Plan (scale audit): ONE range Exchange (``repartitionByRange`` on the
-    order columns) + in-partition sort; an O(partitions) count collect
-    (the partition-summary class the engine sanctions — same as
-    is_sorted's physical check); and one streamed Arrow pass that adds
-    ``partition offset + local running position`` without buffering.
-    Spark reuses the materialized shuffle across the two jobs, so the
-    counts and the index pass see the SAME partitioning. No global
-    single-partition window anywhere — this is the 10^12-row-safe form
-    of ``row_number() OVER (ORDER BY ...)``.
+    order columns) + in-partition sort, materialized once by a local
+    checkpoint; an O(partitions) count collect (the partition-summary
+    class the engine sanctions — same as is_sorted's physical check);
+    and one streamed Arrow pass that adds ``partition offset + local
+    running position`` without buffering. Range bounds are SAMPLED, so
+    two range shuffles can split differently: both passes read the one
+    checkpoint. No global single-partition window anywhere — this is the
+    10^12-row-safe form of ``row_number() OVER (ORDER BY ...)``.
     """
     from pyspark import TaskContext
     from pyspark.sql.types import LongType, StructField, StructType
@@ -145,7 +145,11 @@ def add_row_index(
         raise ValueError("add_row_index requires a non-empty order_by")
     if index_col in df.columns:
         raise ValueError(f"column {index_col!r} already exists")
-    d = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
+    d = (
+        df.repartitionByRange(*order_by)
+        .sortWithinPartitions(*order_by)
+        .localCheckpoint()
+    )
     counts = {
         r["__pid"]: r["cnt"]
         for r in d.groupBy(
@@ -165,9 +169,10 @@ def add_row_index(
     def add_idx(batches):
         import numpy as np
 
-        pid = TaskContext.get().partitionId()
-        pos = offsets.get(pid, 0)
+        pos = None
         for pdf in batches:
+            if pos is None:  # empty partitions yield no batch, no offset
+                pos = offsets[TaskContext.get().partitionId()]
             n = len(pdf)
             pdf[index_col] = np.arange(pos, pos + n, dtype="int64")
             pos += n

@@ -436,19 +436,18 @@ def transition_latency_buckets(
     role = F.col(role_col)
     is_resp = (role == responder) & (F.lag(role).over(w) == initiator)
     gap_ms = (ms - F.lag(ms).over(w)).cast("double")
+    # calendar fields from UTC epoch millis, not the session time zone
+    day_ms = F.pmod(ms, F.lit(86_400_000))
+    epoch_day = ((ms - day_ms) / F.lit(86_400_000)).cast("long")
     pairs = df.select(
         F.when(is_resp, gap_ms).alias("__gap_ms"),
         # ISO day-of-week (Mon=1..Sun=7) — the engine's documented dow
-        # convention (functions/timeops.py field extractors)
-        F.dayofweek(F.col(ts_col)).alias("__dow_sun1"),
-        F.hour(F.col(ts_col)).cast("long").alias("hour_of_day"),
+        # convention (functions/timeops.py field extractors); epoch day 0,
+        # 1970-01-01, was a Thursday
+        (F.pmod(epoch_day + F.lit(3), F.lit(7)) + F.lit(1)).alias("iso_dow"),
+        (day_ms / F.lit(3_600_000)).cast("long").alias("hour_of_day"),
     ).filter(F.col("__gap_ms").isNotNull())
-    iso_dow = (F.pmod(F.col("__dow_sun1") + F.lit(5), F.lit(7)) + F.lit(1)).cast(
-        "long"
-    )
-    return pairs.select(
-        iso_dow.alias("iso_dow"), "hour_of_day", "__gap_ms"
-    ).groupBy("iso_dow", "hour_of_day").agg(
+    return pairs.groupBy("iso_dow", "hour_of_day").agg(
         F.count(F.lit(1)).alias("n_responses"),
         (F.avg("__gap_ms") / F.lit(1000.0)).alias("mean_gap_s"),
         F.percentile(F.col("__gap_ms") / F.lit(1000.0), F.lit(0.95)).alias(

@@ -22,7 +22,8 @@ Design (scale-first):
   table format's atomic metadata commit.)
 - **One scan for all tiers.** The increment is partially aggregated once at
   the finest tier; coarser tiers re-merge those partials (sums of sums) —
-  the same cascade as operators/rollup.rollup_cascade.
+  the same operators/rollup.cascade_partials that rollup_cascade
+  finalizes.
 - **Checkpoint manifest + resume.** Every refresh appends a run record
   keyed by its snapshot range; each tier commit is recorded with row counts
   and dirty partitions AFTER its write lands. A crashed run resumes by
@@ -51,9 +52,10 @@ from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.compress import compress_series
 from tablecloth_time_spark.operators.rollup import (
+    _bucket_width_ms,
+    cascade_partials,
     finalize_partials,
     merge_partials,
-    partial_rollup,
 )
 from tablecloth_time_spark.plans.snapshots import SnapshotTable
 from tablecloth_time_spark.plans.tier_store import (
@@ -117,7 +119,9 @@ class ContinuousAggregate:
         self.keys = keys
         self.ts_col = ts_col
         self.aggs = aggs
-        self.tiers = tuple(sorted(tiers, key=lambda t: _width_ms(t)))
+        self.tiers = tuple(
+            sorted(tiers, key=lambda t: _bucket_width_ms(t.interval, t.unit))
+        )
         self.order_cols = order_cols or [ts_col]
         self.compress = compress
         # optional DataFrame -> DataFrame hook applied to every increment
@@ -209,11 +213,11 @@ class ContinuousAggregate:
             m["last_snapshot"] = current
             self._commit_manifest(m)
             return run
-        finest = self.tiers[0]
-        finest_partial = partial_rollup(
-            inc, self.keys, self.ts_col, finest.interval, finest.unit,
-            self.aggs, self.order_cols,
-        ).cache()
+        partials = cascade_partials(
+            inc, self.keys, self.ts_col, self.aggs,
+            {t.name: (t.interval, t.unit) for t in self.tiers}, self.order_cols,
+        )
+        finest_partial = partials[self.tiers[0].name]
 
         for tier in self.tiers:
             info = run["tiers"].get(tier.name, {})
@@ -227,7 +231,7 @@ class ContinuousAggregate:
                 info["status"] = "completed"
                 self._commit_manifest(m)
                 continue
-            info = self._stage_tier(tier, finest_partial, run_id)
+            info = self._stage_tier(tier, partials[tier.name], run_id)
             info["status"] = "staged"
             run["tiers"][tier.name] = info
             self._commit_manifest(m)
@@ -255,7 +259,7 @@ class ContinuousAggregate:
         return run
 
     def _stage_tier(
-        self, tier: TierSpec, finest_partial: DataFrame, run_id: str
+        self, tier: TierSpec, tier_partial: DataFrame, run_id: str
     ) -> dict:
         """Compute the FULL new content of every dirty partition and hand
         it to the store's stage. Staging (expensive, recomputable) is
@@ -263,10 +267,9 @@ class ContinuousAggregate:
         swap) so a crash at any point either recomputes the stage or
         replays the swap — the increment can never be merged into live
         state twice."""
-        new_partial = merge_partials(
-            finest_partial, self.keys, self.aggs,
-            rebucket=(tier.interval, tier.unit),
-        ).withColumn(P_DATE, F.date_format(BUCKET, "yyyy-MM-dd"))
+        new_partial = tier_partial.withColumn(
+            P_DATE, F.date_format(BUCKET, "yyyy-MM-dd")
+        )
 
         dirty = [r[0] for r in new_partial.select(P_DATE).distinct().collect()]
         if self.store.tier_exists(tier.name):
@@ -352,9 +355,3 @@ class ContinuousAggregate:
         )
         self._commit_manifest(m)
         return expired
-
-
-def _width_ms(t: TierSpec) -> int:
-    from tablecloth_time_spark.operators.rollup import _bucket_width_ms
-
-    return _bucket_width_ms(t.interval, t.unit)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -46,3 +48,29 @@ def assert_frames_equal(spark_df, pandas_df, sort_cols, check_dtype=False):
     left = left[sorted(left.columns)]
     right = right[sorted(right.columns)]
     pd.testing.assert_frame_equal(left, right, check_dtype=check_dtype)
+
+
+@contextlib.contextmanager
+def session_conf(spark, conf: dict[str, str]):
+    """Set session confs for the block, then restore the previous values."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def await_stream(q) -> None:
+    """Wait for a finite (availableNow) streaming query; one still running
+    after 300 s fails as a timeout, not as a later data diff. The query is
+    stopped either way."""
+    try:
+        assert q.awaitTermination(300), f"streaming query {q.id} timed out"
+    finally:
+        q.stop()

@@ -22,6 +22,8 @@ from tablecloth_time_spark.sources.transcripts import (
     generate_transcripts_pandas,
 )
 
+from tests.conftest import await_stream
+
 
 @pytest.fixture(scope="module")
 def tdata(spark):
@@ -241,7 +243,7 @@ def test_streaming_type_entropy_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got_all = spark.read.parquet(sink).toPandas()
     # per key: the row with the largest n_rows is the final state

@@ -39,7 +39,10 @@ def _with_chars_pandas(pdf):
 
 
 def _compare(eng_df, ora_pdf, keys):
-    eng = eng_df.toPandas()
+    _compare_pandas(eng_df.toPandas(), ora_pdf, keys)
+
+
+def _compare_pandas(eng, ora_pdf, keys):
     eng = eng.sort_values(keys, kind="stable").reset_index(drop=True)
     ora = ora_pdf.sort_values(keys, kind="stable").reset_index(drop=True)
     eng = eng[sorted(eng.columns)]
@@ -92,46 +95,88 @@ def test_cascade_equals_direct(spark, transcripts_df):
     pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])
 
 
-def test_rollup_multi_matches_per_tier(spark, transcripts_df, transcripts_pdf):
-    """grouping-sets multi-tier must equal the per-tier rollup (and hence
-    the pandas oracle) for every tier and every agg kind incl first/last."""
-    from tablecloth_time_spark.operators.rollup import rollup_multi
+ALL_TIERS = {
+    "second": (1, "second"),
+    "minute": (1, "minute"),
+    "hour": (1, "hour"),
+    "day": (1, "day"),
+}
 
-    tiers = {
-        "second": (1, "second"),
-        "minute": (1, "minute"),
-        "hour": (1, "hour"),
-        "day": (1, "day"),
-    }
-    eng_tiers = rollup_multi(
-        _with_chars_spark(transcripts_df),
-        ["conv_id"], "ts", AGGS, tiers=tiers, order_cols=ORDER,
-    )
+
+def _outer_plan(df) -> str:
+    """Executed plan above any cache: an InMemoryTableScan prints the plan
+    that filled its cache as an inner child, which is not re-run."""
+    return df._jdf.queryExecution().executedPlan().toString().split(
+        "InMemoryRelation"
+    )[0]
+
+
+@pytest.mark.parametrize("plan", ["cascade", "tiers_long"])
+def test_tier_plans_match_oracle(spark, transcripts_df, transcripts_pdf, plan):
+    """Both multi-tier plans equal the pandas oracle for every tier and
+    every agg kind. The transcripts carry duplicate (conv_id, ts) rows, so
+    first/last also pin the turn_idx tie-break through each plan."""
+    from tablecloth_time_spark.operators.rollup import rollup_tiers_long
+
     pdf = _with_chars_pandas(transcripts_pdf)
-    for tier, (iv, unit) in tiers.items():
+    assert pdf.duplicated(["conv_id", "ts"]).any()
+    df = _with_chars_spark(transcripts_df)
+    if plan == "cascade":
+        got = {
+            tier: tdf.toPandas()
+            for tier, tdf in rollup_cascade(
+                df, ["conv_id"], "ts", AGGS, tiers=ALL_TIERS, order_cols=ORDER
+            ).items()
+        }
+    else:
+        long = rollup_tiers_long(
+            df, ["conv_id"], "ts", AGGS, tiers=ALL_TIERS, order_cols=ORDER
+        ).toPandas()
+        got = {t: g.drop(columns="tier") for t, g in long.groupby("tier")}
+    assert sorted(got) == sorted(ALL_TIERS)
+    for tier, (iv, unit) in ALL_TIERS.items():
         ora = O.rollup(pdf, ["conv_id"], "ts", iv, unit, AGGS, order_cols=ORDER)
-        _compare(eng_tiers[tier], ora, ["conv_id", "bucket"])
+        _compare_pandas(got[tier], ora, ["conv_id", "bucket"])
 
 
-def test_rollup_multi_single_exchange(spark, transcripts_df):
-    """All-tier union must stay ONE Expand + one shuffle stage pair."""
-    from functools import reduce
+def test_rollup_tiers_long_is_one_expand_one_exchange(spark, transcripts_df):
+    """The one-action plan: every tier from ONE Expand and ONE shuffle."""
+    from tablecloth_time_spark.operators.rollup import rollup_tiers_long
 
-    from tablecloth_time_spark.operators.rollup import rollup_multi
-
-    tiers = rollup_multi(
-        _with_chars_spark(transcripts_df), ["conv_id"], "ts", AGGS, order_cols=ORDER
+    p = _outer_plan(
+        rollup_tiers_long(
+            _with_chars_spark(transcripts_df), ["conv_id"], "ts", AGGS,
+            order_cols=ORDER,
+        )
     )
-    counts = reduce(
-        lambda a, b: a.unionAll(b), [df.groupBy().count() for df in tiers.values()]
-    )
-    total = counts.agg(F.sum("count"))
-    p = total._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" in p
-    # one tier df alone: expand -> partial agg -> exchange -> final agg
-    one = tiers["day"]
-    p1 = one._jdf.queryExecution().executedPlan().toString()
-    assert p1.count("Exchange") == 1 and "Expand" in p1
+    assert p.count("Expand [") == 1
+    assert p.count("Exchange ") == 1
+
+
+def test_rollup_cascade_scans_raw_once(spark, transcripts_df):
+    """The per-tier plan: every coarser tier reads the cached finest
+    partial, so materializing the tiers one by one computes the raw input
+    once (counted by an accumulator the input bumps per partition)."""
+    scans = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        scans.add(1)
+        yield from batches
+
+    raw = _with_chars_spark(transcripts_df)
+    raw = raw.mapInPandas(tap, raw.schema)
+    tiers = rollup_cascade(raw, ["conv_id"], "ts", AGGS, order_cols=ORDER)
+    finest, *coarser = tiers.values()
+    for tdf in coarser:
+        p = _outer_plan(tdf)
+        assert "InMemoryTableScan" in p
+        assert "MapInPandas" not in p
+    finest.write.format("noop").mode("overwrite").save()
+    once = scans.value
+    assert once > 0
+    for tdf in coarser:
+        tdf.write.format("noop").mode("overwrite").save()
+    assert scans.value == once
 
 
 def test_first_last_stable_under_duplicate_ts(spark):

@@ -126,6 +126,27 @@ def test_latency_buckets_matches_pandas(spark, tdata):
         )
 
 
+def test_latency_buckets_independent_of_session_timezone(spark, tdata):
+    """(iso_dow, hour_of_day) come from UTC epoch millis: the same instants
+    give the same rows under a Los Angeles session as under UTC."""
+    from tests.conftest import session_conf
+
+    df, _ = tdata
+
+    def rows():
+        return sorted(
+            tuple(r) for r in transition_latency_buckets(df).collect()
+        )
+
+    with session_conf(spark, {"spark.sql.session.timeZone": "UTC"}):
+        utc = rows()
+    with session_conf(
+        spark, {"spark.sql.session.timeZone": "America/Los_Angeles"}
+    ):
+        la = rows()
+    assert la == utc
+
+
 def test_latency_buckets_plan_two_exchanges(spark, tdata):
     """Window Exchange on conv_id + the constant-bounded (dow, hour)
     aggregate's Exchange — nothing else, no Python."""

@@ -396,6 +396,52 @@ def test_add_row_index_matches_global_sort(spark):
         assert got["b"].tolist() == expected["b"].tolist()
 
 
+def test_add_row_index_exact_under_sampled_range_bounds(spark):
+    """Range bounds come from a SAMPLE of the input. With one sample per
+    partition, many shuffle partitions and far more rows than samples,
+    two range shuffles of the same frame pick different bounds — so the
+    partition counts and the positions must come from ONE partitioning.
+    The index is exactly 0..n-1 and equals DuckDB's row_number()."""
+    import duckdb
+
+    from tablecloth_time_spark.operators.slice import add_row_index
+
+    from tests.conftest import session_conf
+
+    rng = np.random.default_rng(59)
+    n = 20_000
+    pdf = pd.DataFrame(
+        {
+            "a": rng.permutation(n).astype("int64"),
+            "b": rng.integers(0, 1000, n).astype("int64"),
+        }
+    )
+    con = duckdb.connect()
+    con.register("t", pdf)
+    want = con.execute(
+        "SELECT a, b, row_number() OVER (ORDER BY a) - 1 AS row_index "
+        "FROM t ORDER BY row_index"
+    ).df()
+    with session_conf(
+        spark,
+        {
+            "spark.sql.execution.rangeExchange.sampleSizePerPartition": "1",
+            "spark.sql.shuffle.partitions": "64",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        },
+    ):
+        got = (
+            add_row_index(spark.createDataFrame(pdf).repartition(8), ["a"])
+            .toPandas()
+            .sort_values("row_index", kind="stable")
+            .reset_index(drop=True)
+        )
+    assert got["row_index"].tolist() == list(range(n))
+    pd.testing.assert_frame_equal(
+        got[["a", "b", "row_index"]], want, check_dtype=False
+    )
+
+
 def test_add_row_index_validation(spark):
     from tablecloth_time_spark.operators.slice import add_row_index
 

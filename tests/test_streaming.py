@@ -17,6 +17,8 @@ from tablecloth_time_spark.streaming.rollup import (
     _interval_string,
 )
 
+from tests.conftest import await_stream
+
 AGGS = {
     "n_turns": ("count", "turn_idx"),
     "sum_chars": ("sum", "text_len"),
@@ -56,7 +58,7 @@ def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
         order_cols=["ts", "turn_idx"], watermark="0 seconds",
         available_now=True,
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -99,7 +101,7 @@ def test_streaming_restart_is_exactly_once(spark, transcripts_df, tmp_path):
             order_cols=["ts", "turn_idx"], watermark="0 seconds",
             available_now=True,
         )
-        q.awaitTermination(300)
+        await_stream(q)
 
     n = spark.read.parquet(sink).filter("conv_id <> '__flush__'").count()
     expected = rollup(
@@ -140,7 +142,7 @@ def test_streaming_sessionize_matches_batch_session_window(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -227,7 +229,7 @@ def test_streaming_counter_rate_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -283,7 +285,7 @@ def test_streaming_counter_rate_flags_out_of_order(spark, tmp_path):
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = spark.read.parquet(sink).toPandas().sort_values("ts_ms")
     ooo = got[got["out_of_order"]]
     assert len(ooo) == 1 and ooo.iloc[0]["value"] == 15.0
@@ -319,7 +321,7 @@ def test_streaming_counter_rate_state_not_regressed_by_late_batch(
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
     # 25.0 at t=20s: delta vs the TRUE predecessor (20.0 at t=10s), not
     # vs the late sample (15.0 at t=5s)
@@ -360,7 +362,7 @@ def test_streaming_counter_rate_mixed_late_batch(spark, tmp_path):
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
     assert got[15.0]["out_of_order"] and got[15.0]["delta"] is None
     assert not got[25.0]["out_of_order"]
@@ -398,7 +400,7 @@ def test_streaming_counter_rate_wholly_late_multirow_batch(spark, tmp_path):
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
     assert got[11.0]["out_of_order"] and got[15.0]["out_of_order"]
     assert got[11.0]["delta"] is None and got[15.0]["delta"] is None
@@ -434,7 +436,7 @@ def test_streaming_counter_rate_exact_timestamp_replay_keeps_state(
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
     # 25.0 at t=20s differences against the FIRST delivery (20.0), not
     # the replayed 99.0 — delta 5.0 over 10s
@@ -512,7 +514,7 @@ def test_streaming_dedup_suppresses_cross_run_duplicates(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_stream(q)
 
     run_wave(
         [
@@ -585,7 +587,7 @@ def test_streaming_m4_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.table("m4_stream")
@@ -653,7 +655,7 @@ def test_streaming_histogram_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.table("hist_stream")
@@ -734,7 +736,7 @@ def test_streaming_cusum_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -798,7 +800,7 @@ def test_streaming_cusum_null_sd_yields_null_scores(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = spark.read.parquet(sink).toPandas()
     assert len(got) == 3
     assert got["cusum_pos"].isna().all()
@@ -847,7 +849,7 @@ def test_streaming_detect_gaps_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -917,7 +919,7 @@ def test_streaming_detect_gaps_flags_late_and_first_sample(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = (
         spark.read.parquet(sink)
         .toPandas()
@@ -976,7 +978,7 @@ def test_streaming_cusum_mixed_invalid_sd_rows(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = (
         spark.read.parquet(sink)
         .toPandas()
@@ -1050,7 +1052,7 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = spark.read.parquet(sink).toPandas()
     # progress is monotone: take each key's furthest emission
@@ -1130,7 +1132,7 @@ def test_streaming_ewma_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -1200,7 +1202,7 @@ def test_streaming_hopping_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.table("hop_stream")
@@ -1288,7 +1290,7 @@ def test_streaming_profile_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     cutoff = dt.datetime(2029, 1, 1)
     got = (
@@ -1369,7 +1371,7 @@ def test_streaming_budget_prefix_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = spark.read.parquet(sink).toPandas()
     late = got[got["out_of_order"]]
@@ -1434,7 +1436,7 @@ def test_streaming_budget_prefix_fractional_costs_match_batch(
         .option("path", sink).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = (
         spark.read.parquet(sink)
         .toPandas()

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from tablecloth_time_spark.operators.validate import sortedness_report
 from tablecloth_time_spark.streaming.stateful import streaming_sortedness
 
+from tests.conftest import await_stream
+
 
 def _fixture(n: int = 400, seed: int = 13) -> pd.DataFrame:
     rng = np.random.default_rng(seed)
@@ -57,7 +59,7 @@ def test_streaming_sortedness_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     got = (
         spark.read.parquet(sink)
@@ -117,7 +119,7 @@ def test_streaming_sortedness_null_predecessor_carry(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = (
         spark.read.parquet(sink)
         .toPandas()
@@ -179,7 +181,7 @@ def test_streaming_alternation_runs_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
 
     emitted = spark.read.parquet(sink).toPandas()
     # last emission per key = the one with the largest running n_turns
