@@ -74,3 +74,8 @@ def await_stream(q) -> None:
         assert q.awaitTermination(300), f"streaming query {q.id} timed out"
     finally:
         q.stop()
+
+
+def executed_plan(df) -> str:
+    """The physical plan Spark would run for ``df``, as its plan string."""
+    return df._jdf.queryExecution().executedPlan().toString()

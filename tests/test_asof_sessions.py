@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.asof import asof_join
 from tablecloth_time_spark.operators.sessions import session_stats, sessionize
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -372,7 +373,7 @@ def test_asof_nearest_single_exchange_and_microseconds(spark):
         left, right, on="k", left_ts="ts", right_ts="rts",
         direction="nearest",
     )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(joined)
     assert plan.count("Exchange") == 1
     assert "Join" not in plan  # still join-free
     r = joined.collect()[0]

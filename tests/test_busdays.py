@@ -24,6 +24,7 @@ from tablecloth_time_spark.functions.busdays import (
     next_business_day,
     prev_business_day,
 )
+from tests.conftest import executed_plan
 
 HOLIDAYS = ["2021-01-01", "2021-12-24", "2021-07-05", "2022-04-15"]
 
@@ -149,6 +150,6 @@ def test_busdays_plan_no_exchange_no_python(dates_df):
         add_business_days("d1", 5).alias("plus5"),
         business_days_between("d1", "d2", holidays=HOLIDAYS).alias("n"),
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "Exchange" not in plan
     assert "Python" not in plan and "MapInPandas" not in plan

@@ -15,6 +15,7 @@ from tablecloth_time_spark.operators.changepoint import (
     _pelt_l2,
     pelt_changepoints,
 )
+from tests.conftest import executed_plan
 
 
 def brute_force_opt(x: np.ndarray, beta: float, min_size: int) -> list[int]:
@@ -141,6 +142,6 @@ def test_pelt_plan_one_exchange_arrow_kernel(spark):
         "k string, ms long, x double",
     ).selectExpr("k", "timestamp_millis(ms) AS ts", "x")
     out = pelt_changepoints(sdf, "k", "ts", "x")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "MapInPandas" in plan  # the sanctioned Arrow kernel path

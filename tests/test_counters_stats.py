@@ -24,7 +24,7 @@ from tablecloth_time_spark.operators.stats import (
     topk_per_bucket,
 )
 
-from tests.conftest import assert_frames_equal
+from tests.conftest import assert_frames_equal, executed_plan
 
 T0 = dt.datetime(2024, 3, 1, 0, 0, 0)
 
@@ -178,10 +178,7 @@ def test_counter_increase_plan(spark, series):
     from tablecloth_time_spark.operators.counters import counter_increase
 
     df, _ = series
-    plan = (
-        counter_increase(df, "k", "ts", "v", 1, "hour")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(counter_increase(df, "k", "ts", "v", 1, "hour"))
     # ONE shuffle: the (k, bucket) aggregate's clustering requirement is
     # satisfied by the lag window's hash partitioning on k alone
     assert plan.count("Exchange") == 1
@@ -988,7 +985,7 @@ def test_mad_anomalies_zero_mad_and_plan(spark):
     got = {r["i"]: (r["score"], r["is_anomaly"]) for r in out.collect()}
     assert all(s is None and f is False for s, f in got.values())
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "Python" not in plan and "InPandas" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -1047,7 +1044,7 @@ def test_cusum_degenerate_and_plan(spark):
         assert r["cusum_pos"] is None and r["cusum_neg"] is None, r
         assert r["is_drift"] is False, r
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "Python" not in plan and "InPandas" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -1167,9 +1164,6 @@ def test_slo_burn_rate_validates_and_plan(spark):
         )
     with pytest.raises(ValueError, match="narrower than long"):
         slo_burn_rate(df, "k", "ts", "err", short=(0, "minute"))
-    plan = (
-        slo_burn_rate(df, "k", "ts", "err")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(slo_burn_rate(df, "k", "ts", "err"))
     assert plan.count("Exchange") == 1
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan

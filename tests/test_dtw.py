@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 
 from tablecloth_time_spark.operators.dtw import dtw_distances, dtw_pairwise
+from tests.conftest import executed_plan
 
 
 def _dtw_ref(a, b, band=None):
@@ -95,8 +96,7 @@ def test_dtw_plan_single_arrow_eval(spark):
          "v": [1.0, 2, 3, 4, 4, 3, 2, 1]}
     )
     df = spark.createDataFrame(pdf, schema="k string, t timestamp, v double")
-    p = dtw_distances(df, "k", "t", "v", 1, "hour")._jdf.queryExecution() \
-        .executedPlan().toString()
+    p = executed_plan(dtw_distances(df, "k", "t", "v", 1, "hour"))
     # one Arrow-vectorized eval; never a row-at-a-time Python UDF
     assert p.count("ArrowEvalPython") == 1, p
     assert "BatchEvalPython" not in p

@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from tablecloth_time_spark.operators.counters import ewma_rows, macd
+from tests.conftest import executed_plan
 
 
 def _mk(spark, n_per_key, nan_frac=0.1, seed=5):
@@ -145,6 +146,6 @@ def test_macd_matches_pandas(spark):
 def test_ewma_rows_plan_one_exchange_no_python(spark):
     pdf, df = _mk(spark, {"a": 300}, seed=1)
     out = macd(df, "k", ["i"], "x")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "MapInPandas" not in plan

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.features import series_features
+from tests.conftest import executed_plan
 
 
 def _oracle(x: np.ndarray) -> dict:
@@ -143,12 +144,7 @@ def test_series_features_nan_and_null_dropped(spark):
 def test_series_features_plan(spark, panel):
     pdf, _ = panel
     df = spark.createDataFrame(pdf)
-    plan = (
-        series_features(df, ["k"], "ts", "v", order_cols=["idx"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(series_features(df, ["k"], "ts", "v", order_cols=["idx"]))
     assert "Python" not in plan and "BatchEvalPython" not in plan
     # the raw data crosses the wire once: the per-key window Exchange;
     # everything after shuffles only per-key sums / (key, run) counts

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.forecast import benchmark_forecast
 
-from tests.conftest import assert_frames_equal
+from tests.conftest import assert_frames_equal, executed_plan
 
 T0 = dt.datetime(2024, 1, 1)
 DAY = dt.timedelta(days=1)
@@ -148,10 +148,10 @@ def test_snaive_requires_season(spark, daily):
 
 def test_forecast_plan_no_python(spark, daily):
     df, _ = daily
-    plan = benchmark_forecast(
+    plan = executed_plan(benchmark_forecast(
         df, "k", "ts", "v", 7, 1, "day",
         methods=("mean", "naive", "drift", "snaive"), season_length=7,
-    )._jdf.queryExecution().executedPlan().toString()
+    ))
     assert "Python" not in plan and "InPandas" not in plan
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
@@ -269,8 +269,7 @@ def test_trend_fit_plan_single_aggregate(spark, daily):
     from tablecloth_time_spark.operators.stats import trend_fit
 
     df, _ = daily
-    plan = trend_fit(df, ["k"], "ts", "v")._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = executed_plan(trend_fit(df, ["k"], "ts", "v"))
     assert plan.count("Exchange") == 1
     assert "Window" not in plan
     assert "Python" not in plan and "InPandas" not in plan
@@ -406,9 +405,9 @@ def test_ses_identities(spark):
 
 def test_ses_plan_no_python(spark, daily):
     df, _ = daily
-    plan = benchmark_forecast(
+    plan = executed_plan(benchmark_forecast(
         df, "k", "ts", "v", 7, 1, "day", methods=("ses",),
-    )._jdf.queryExecution().executedPlan().toString()
+    ))
     assert "Python" not in plan and "InPandas" not in plan
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
@@ -499,9 +498,9 @@ def test_theta_identities(spark):
 
 def test_theta_plan_no_python(spark, daily):
     df, _ = daily
-    plan = benchmark_forecast(
+    plan = executed_plan(benchmark_forecast(
         df, "k", "ts", "v", 7, 1, "day", methods=("theta",),
-    )._jdf.queryExecution().executedPlan().toString()
+    ))
     assert "Python" not in plan and "InPandas" not in plan
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
@@ -584,9 +583,9 @@ def test_brown_tracks_exact_trend(spark):
 
 def test_brown_plan_no_python(spark, daily):
     df, _ = daily
-    plan = benchmark_forecast(
+    plan = executed_plan(benchmark_forecast(
         df, "k", "ts", "v", 7, 1, "day", methods=("brown",),
-    )._jdf.queryExecution().executedPlan().toString()
+    ))
     assert "Python" not in plan and "InPandas" not in plan
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
@@ -660,7 +659,7 @@ def test_croston_validation_and_plan(spark):
     out = croston_forecast(df, "k", "ts", "v", 1, "day", alpha=0.5)
     # plan BEFORE execution: post-collect AQE toString appends the
     # initial plan again, double-counting the Exchange
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "Python" not in plan and "InPandas" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
 
@@ -819,9 +818,9 @@ def test_holt_plan_no_python(spark, daily):
     from tablecloth_time_spark.operators.forecast import holt_forecast
 
     df, _ = daily
-    plan = holt_forecast(
+    plan = executed_plan(holt_forecast(
         df, "k", "ts", "v", 3, 1, "day"
-    )._jdf.queryExecution().executedPlan().toString()
+    ))
     assert "BatchEvalPython" not in plan
     assert "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan
@@ -969,10 +968,7 @@ def test_ar_forecast_plan_no_python(spark, daily):
     from tablecloth_time_spark.operators.forecast import ar_forecast
 
     df, _ = daily
-    plan = (
-        ar_forecast(df, "k", "ts", "v", 5, 1, "day")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(ar_forecast(df, "k", "ts", "v", 5, 1, "day"))
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
 

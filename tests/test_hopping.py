@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.rollup import hopping_rollup
+from tests.conftest import executed_plan
 
 MIN_MS = 60_000
 HOUR_MS = 3_600_000
@@ -102,7 +103,7 @@ def test_hopping_plan_single_agg_pair(points_df):
     out = hopping_rollup(
         sdf, ["k"], "ts", 60, 15, "minute", {"n": ("count", "x")}
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert plan.count("HashAggregate") == 2
     assert "Expand" in plan and "Generate" not in plan
@@ -118,6 +119,6 @@ def test_hopping_dead_zone_plan_no_replication(spark):
     out = hopping_rollup(
         sdf, ["k"], "ts", 30, 60, "minute", {"n": ("count", "x")}
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "Expand" not in plan and "Generate" not in plan
     assert plan.count("HashAggregate") == 2

@@ -12,6 +12,7 @@ from tablecloth_time_spark.functions.text import (
     redact_pii,
 )
 from tablecloth_time_spark.operators.dedup import ngram_overlap_flags
+from tests.conftest import executed_plan
 
 
 def _one(spark, text):
@@ -110,7 +111,7 @@ def test_ngram_overlap_plan_broadcasts(spark):
     bench = spark.createDataFrame([("q", "one two three four")], ["qid", "text"])
     corpus = spark.createDataFrame([("d", "one two three four five")], ["doc_id", "text"])
     out = ngram_overlap_flags(corpus, bench, n=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "BroadcastHashJoin" in plan
     assert "Python" not in plan and "InPandas" not in plan
     # the tokenize pipeline must run ONCE per side per row: plain explode

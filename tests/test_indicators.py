@@ -18,6 +18,7 @@ from tablecloth_time_spark.operators.indicators import (
     bollinger_bands,
     rsi_cutler,
 )
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -116,7 +117,7 @@ def test_indicators_plan_one_exchange_no_python(series_df):
         bollinger_bands(df, ["k"], ["i"], "x", n=20),
         ["k"], ["i"], "x", n=14,
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "MapInPandas" not in plan
 

@@ -16,7 +16,7 @@ from tablecloth_time_spark.operators.downsample import m4_downsample
 from tablecloth_time_spark.operators.intervals import merge_intervals
 from tablecloth_time_spark.operators.stats import level_shift_scores
 
-from tests.conftest import assert_frames_equal
+from tests.conftest import assert_frames_equal, executed_plan
 
 T0 = dt.datetime(2024, 3, 1, 0, 0, 0)
 
@@ -110,8 +110,7 @@ def test_m4_single_point_bucket(spark):
 def test_m4_plan_is_single_aggregate(spark, series):
     """M4 must stay a pure hash-aggregate: no window sort, no Python."""
     df, _ = series
-    plan = m4_downsample(df, "k", "ts", "v", 1, "hour")._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = executed_plan(m4_downsample(df, "k", "ts", "v", 1, "hour"))
     assert "Window" not in plan
     assert "Python" not in plan and "InPandas" not in plan
     assert plan.count("Exchange") == 1
@@ -216,8 +215,7 @@ def test_merge_intervals_matches_pandas(spark):
 
 def test_merge_intervals_plan_single_exchange(spark):
     df = spark.createDataFrame([_iv(0, 10), _iv(5, 20)], ["k", "start", "end"])
-    plan = merge_intervals(df, "k", "start", "end")._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = executed_plan(merge_intervals(df, "k", "start", "end"))
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "InPandas" not in plan
 
@@ -336,17 +334,16 @@ def test_level_shift_detects_step(spark):
 
 def test_cohort_plan_no_python(spark, series):
     df, _ = series
-    plan = cohort_retention(df, "k", "ts", 1, "week")._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = executed_plan(cohort_retention(df, "k", "ts", 1, "week"))
     assert "Python" not in plan and "InPandas" not in plan
 
 
 def test_level_shift_plan_single_exchange(spark, series):
     """Both side-frames must share one sort: a single Exchange, no Python."""
     df, _ = series
-    plan = level_shift_scores(
+    plan = executed_plan(level_shift_scores(
         df, ["k"], "ts", "v", window=8
-    )._jdf.queryExecution().executedPlan().toString()
+    ))
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "InPandas" not in plan
 
@@ -823,10 +820,7 @@ def test_funnel_validates_and_plan(spark):
         funnel(df, "u", "ts", "step", ["view"])
     with pytest.raises(ValueError, match="distinct"):
         funnel(df, "u", "ts", "step", ["view", "view"])
-    plan = (
-        funnel(df, "u", "ts", "step", ["view", "click"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(funnel(df, "u", "ts", "step", ["view", "click"]))
     assert "CartesianProduct" not in plan and "BatchEvalPython" not in plan
 
 
@@ -923,10 +917,7 @@ def test_histogram_quantile_plan_no_python(spark):
             columns=["k", "bin", "n", "bin_lo", "bin_hi"],
         )
     )
-    plan = (
-        histogram_quantile(hist, ["k"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(histogram_quantile(hist, ["k"]))
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     assert plan.count("Exchange") == 1  # window partitioning reused by agg
 
@@ -1039,10 +1030,7 @@ def test_rolling_active_users_no_distinct_over_window_plan(spark):
     df = spark.createDataFrame(pdf)
     with pytest.raises(ValueError, match=">= 1"):
         rolling_active_users(df, "u", "ts", window=0)
-    plan = (
-        rolling_active_users(df, "u", "ts", window=7)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(rolling_active_users(df, "u", "ts", window=7))
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
 

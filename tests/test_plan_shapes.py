@@ -14,12 +14,9 @@ from pyspark.sql import functions as F
 from tablecloth_time_spark.operators.rollup import rollup
 from tablecloth_time_spark.operators.similarity import brute_force_topk
 from tablecloth_time_spark.operators.slice import slice_time
+from tests.conftest import executed_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +25,7 @@ def events(spark):
 
 
 def test_slice_pushes_predicates_and_prunes_columns(events):
-    p = _plan(
+    p = executed_plan(
         slice_time(events, "ts", "2024-01-03", "2024-01-05").select("event_id", "ts")
     )
     assert "GreaterThanOrEqual(ts" in p and "LessThanOrEqual(ts" in p
@@ -38,7 +35,7 @@ def test_slice_pushes_predicates_and_prunes_columns(events):
 
 
 def test_rollup_is_partial_final_with_one_exchange(events):
-    p = _plan(
+    p = executed_plan(
         rollup(events, ["user_id"], "ts", 1, "hour", {"n": ("count", "event_id")})
     )
     assert p.count("HashAggregate") == 2  # map-side partial + final
@@ -46,7 +43,7 @@ def test_rollup_is_partial_final_with_one_exchange(events):
 
 
 def test_salted_rollup_is_two_phase(events):
-    p = _plan(
+    p = executed_plan(
         rollup(
             events, ["user_id"], "ts", 1, "hour",
             {"n": ("count", "event_id")},
@@ -62,7 +59,7 @@ def test_topk_broadcasts_queries_and_never_shuffles_corpus(spark, events):
     q = emb.filter("vec_id < 3").selectExpr(
         "vec_id as query_id", "embedding as query_vec"
     )
-    p = _plan(brute_force_topk(emb, q, k=5))
+    p = executed_plan(brute_force_topk(emb, q, k=5))
     assert "BroadcastNestedLoopJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -75,7 +72,7 @@ def test_tier_table_bucket_predicate_pushdown(spark, events, tmp_path):
         .sortWithinPartitions("bucket", "user_id")
         .write.parquet(path)
     )
-    p = _plan(
+    p = executed_plan(
         spark.read.parquet(path).filter("bucket >= timestamp'2024-01-20 00:00:00'")
     )
     assert "PushedFilters: [IsNotNull(bucket), GreaterThanOrEqual(bucket" in p
@@ -94,7 +91,7 @@ def test_asof_join_is_union_window_not_range_join(spark, events):
         events.select("event_id", "user_id", "ts"), hourly,
         on="user_id", left_ts="ts", right_ts="rts",
     )
-    p = _plan(out)
+    p = executed_plan(out)
     assert "Join" not in p, p
     assert "Window" in p
     # one exchange for the rollup, one hashpartitioning for the window key
@@ -104,7 +101,7 @@ def test_asof_join_is_union_window_not_range_join(spark, events):
 def test_sessionize_single_shuffle(spark, events):
     from tablecloth_time_spark.operators.sessions import sessionize
 
-    p = _plan(sessionize(events, "user_id", "ts", 30, "minute"))
+    p = executed_plan(sessionize(events, "user_id", "ts", 30, "minute"))
     assert p.count("Exchange") == 1
     assert "Join" not in p
 
@@ -183,16 +180,16 @@ def test_counter_ops_single_shuffle(spark, events):
         time_weighted_avg,
     )
 
-    p = _plan(counter_rate(events, "user_id", "ts", "value"))
+    p = executed_plan(counter_rate(events, "user_id", "ts", "value"))
     assert p.count("Exchange") == 1 and "Join" not in p
 
-    p = _plan(detect_gaps(events, "user_id", "ts", 2, "hour"))
+    p = executed_plan(detect_gaps(events, "user_id", "ts", 2, "hour"))
     assert p.count("Exchange") == 1 and "Join" not in p
 
     # twa: one Exchange feeds BOTH the lead window and the bucket-grouped
     # aggregate; the struct-min agg plans as partial/final SortAggregate,
     # which reuses the window's sort — no extra Exchange, no extra Sort
-    p = _plan(time_weighted_avg(events, "user_id", "ts", "value", 1, "day"))
+    p = executed_plan(time_weighted_avg(events, "user_id", "ts", "value", 1, "day"))
     assert p.count("Exchange") == 1, p
     assert p.count("SortAggregate") == 2 and "Join" not in p
     assert p.count("Sort [") == 1, p  # the window's sort, reused by the agg
@@ -209,7 +206,7 @@ def test_interval_join_is_equi_join_not_nested_loop(spark, events):
         F.col("ts").alias("start"),
         (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("end"),
     )
-    p = _plan(
+    p = executed_plan(
         interval_join(
             events.select("event_id", "ts"), ivs, "ts", "start", "end",
             bucket_width=2, unit="hour",
@@ -227,7 +224,7 @@ def test_topk_per_bucket_map_side_combine(spark, events):
     row per distinct pair), then one window over the distinct frame."""
     from tablecloth_time_spark.operators.stats import topk_per_bucket
 
-    p = _plan(topk_per_bucket(events, "event_type", "ts", 1, "day", k=3))
+    p = executed_plan(topk_per_bucket(events, "event_type", "ts", 1, "day", k=3))
     assert p.count("HashAggregate") == 2, p
     assert "Window" in p and "Join" not in p
 
@@ -238,10 +235,10 @@ def test_distinct_rollup_shapes(spark, events):
     — constant-size sketches, the 100 TB shape."""
     from tablecloth_time_spark.operators.stats import distinct_rollup
 
-    p = _plan(distinct_rollup(events, ["event_type"], "ts", "user_id", 1, "day"))
+    p = executed_plan(distinct_rollup(events, ["event_type"], "ts", "user_id", 1, "day"))
     assert p.count("Exchange") == 2 and p.count("HashAggregate") == 4, p
 
-    p = _plan(
+    p = executed_plan(
         distinct_rollup(
             events, ["event_type"], "ts", "user_id", 1, "day", exact=False
         )
@@ -259,7 +256,7 @@ def test_near_dup_pair_dedup_exchange_carries_no_vectors(spark):
     from tablecloth_time_spark.operators.similarity import cosine_near_dup_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p = _plan(cosine_near_dup_pairs(emb, dim=64, threshold=0.9))
+    p = executed_plan(cosine_near_dup_pairs(emb, dim=64, threshold=0.9))
     # the dedup is a partial/final aggregate pair over the pair keys
     assert "Join" in p
     # every hashpartitioning Exchange above the join keys on pair ids /
@@ -294,9 +291,9 @@ def test_deterministic_sample_is_shuffle_free(events):
         deterministic_sample,
     )
 
-    p = _plan(deterministic_sample(events, "event_id", 0.25))
+    p = executed_plan(deterministic_sample(events, "event_id", 0.25))
     assert "Exchange" not in p, p
-    p = _plan(
+    p = executed_plan(
         assign_splits(events, "event_id", {"train": 0.8, "val": 0.1, "test": 0.1})
     )
     assert "Exchange" not in p, p
@@ -305,7 +302,7 @@ def test_deterministic_sample_is_shuffle_free(events):
 def test_stratified_sample_single_shuffle(events):
     from tablecloth_time_spark.operators.sample import stratified_sample_exact
 
-    p = _plan(stratified_sample_exact(events, ["event_type"], "event_id", 10))
+    p = executed_plan(stratified_sample_exact(events, ["event_type"], "event_id", 10))
     assert p.count("Exchange") == 1, p
 
 
@@ -318,7 +315,7 @@ def test_decomposition_seasonal_join_broadcasts(events):
     daily = events.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.count(F.lit(1)).cast("double").alias("y"))
-    p = _plan(
+    p = executed_plan(
         classical_decomposition(
             daily, ["event_type"], "day", "y", 7, season_col=F.dayofweek("day")
         )
@@ -336,7 +333,7 @@ def test_minhash_md5_variant_same_plan_shape(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plans = {
-        fn: _plan(minhash_signatures(docs, shingle_words=2, hash_fn=fn))
+        fn: executed_plan(minhash_signatures(docs, shingle_words=2, hash_fn=fn))
         for fn in ("xxhash64", "md5")
     }
     for fn, p in plans.items():
@@ -352,7 +349,7 @@ def test_ewma_is_pure_window_plan(events):
     replaced the pandas ewm kernel; this pins the regression)."""
     from tablecloth_time_spark.operators.counters import ewma
 
-    p = _plan(ewma(events, "user_id", "ts", "value", halflife=1, unit="hour"))
+    p = executed_plan(ewma(events, "user_id", "ts", "value", halflife=1, unit="hour"))
     assert "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p, p
     assert p.count("Exchange") == 1 and "Join" not in p, p
     assert "Window" in p, p
@@ -368,7 +365,7 @@ def test_gapfill_linear_has_no_python(events):
     from tablecloth_time_spark.operators.gapfill import resample_to_regular_grid
 
     for method in ("linear", "nearest"):
-        p = _plan(
+        p = executed_plan(
             resample_to_regular_grid(
                 events, ["user_id"], "ts", "value", 1, "hour", method=method
             )
@@ -387,7 +384,7 @@ def test_star_rollup_broadcasts_all_dims(spark):
     import __spark_entry__ as E
 
     df = E.q_star_rollup(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     # AQE may plan the small-SF agg without a shuffle stage boundary
@@ -398,7 +395,7 @@ def test_star_rollup_broadcasts_all_dims(spark):
 def test_arrival_stats_single_exchange_window_agg_fusion(events):
     from tablecloth_time_spark.operators.stats import arrival_stats
 
-    p = _plan(arrival_stats(events, ["user_id"], "ts", order_cols=["event_id"]))
+    p = executed_plan(arrival_stats(events, ["user_id"], "ts", order_cols=["event_id"]))
     # the lag window's Exchange is the ONLY shuffle: the per-key
     # aggregate's partial AND final both run on the window's clustering
     assert p.count("Exchange") == 1
@@ -408,7 +405,7 @@ def test_arrival_stats_single_exchange_window_agg_fusion(events):
 def test_categorical_entropy_two_mergeable_aggregates(events):
     from tablecloth_time_spark.operators.stats import categorical_entropy
 
-    p = _plan(categorical_entropy(events, ["user_id"], "event_type"))
+    p = executed_plan(categorical_entropy(events, ["user_id"], "event_type"))
     # count-per-(key,cat) + per-key fold, both with map-side partials;
     # no window, no Python anywhere in the plan
     assert p.count("Exchange") == 2
@@ -419,7 +416,7 @@ def test_categorical_entropy_two_mergeable_aggregates(events):
 def test_role_ngrams_share_window_is_post_aggregate_only(events):
     from tablecloth_time_spark.operators.transcripts import role_ngrams
 
-    p = _plan(role_ngrams(events, "user_id", ["ts", "event_id"], "event_type"))
+    p = executed_plan(role_ngrams(events, "user_id", ["ts", "event_id"], "event_type"))
     # the SinglePartition exchange must sit ABOVE the per-gram aggregate
     # (it runs over the |vocab|^n frame, never over the raw table)
     single = p.index("Exchange SinglePartition")

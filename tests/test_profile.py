@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from tablecloth_time_spark.operators.profile import profile_rollup
+from tests.conftest import executed_plan
 
 HOUR_MS = 3_600_000
 
@@ -75,7 +76,7 @@ def test_profile_approx_close_and_mergeable_plan(dirty_df):
     out = profile_rollup(sdf, "ts", ["a", "b"], 6, "hour", exact=False)
     # plan BEFORE executing: post-run the adaptive plan's toString repeats
     # the Exchange in its final+initial sections
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "Expand" not in plan  # approx distinct keeps the single pass
     assert "Python" not in plan

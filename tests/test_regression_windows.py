@@ -14,6 +14,7 @@ import pytest
 
 from tablecloth_time_spark.operators.rolling import rolling_corr
 from tablecloth_time_spark.operators.stats import predict_linear
+from tests.conftest import executed_plan
 
 HOUR_MS = 3_600_000
 
@@ -206,7 +207,7 @@ def test_regression_windows_plan_one_exchange_no_python(series_df):
         predict_linear(df, ["k"], "ts", "x"),
         rolling_corr(df, ["k"], "ts", "x", "y", 6, "hour"),
     ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(out)
         assert plan.count("Exchange") == 1
         assert "Python" not in plan and "MapInPandas" not in plan
 

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from tablecloth_time_spark.operators.rolling import rolling_quantiles
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -73,6 +74,6 @@ def test_rolling_quantiles_validation(spark):
 def test_rolling_quantiles_plan_one_exchange_no_python(noisy_df):
     pdf, df = noisy_df
     out = rolling_quantiles(df, ["k"], ["i"], "x", 9, {"med": 0.5})
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "MapInPandas" not in plan

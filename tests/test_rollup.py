@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.rollup import rollup, rollup_cascade
 from tablecloth_time_spark.oracle import timeops as O
+from tests.conftest import executed_plan
 
 AGGS = {
     "n_turns": ("count", "turn_idx"),
@@ -106,7 +107,7 @@ ALL_TIERS = {
 def _outer_plan(df) -> str:
     """Executed plan above any cache: an InMemoryTableScan prints the plan
     that filled its cache as an inner child, which is not re-run."""
-    return df._jdf.queryExecution().executedPlan().toString().split(
+    return executed_plan(df).split(
         "InMemoryRelation"
     )[0]
 

@@ -24,6 +24,7 @@ from tablecloth_time_spark.operators.validate import (
 from tablecloth_time_spark.sources.transcripts import (
     generate_transcripts_pandas,
 )
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -88,9 +89,7 @@ def test_alternation_runs_plan_single_exchange(spark, tdata):
     """Run marking, run numbering, run lengths, and the per-key fold all
     share the conv_id partitioning: ONE Exchange, no Python."""
     df, _ = tdata
-    plan = (
-        alternation_runs(df)._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(alternation_runs(df))
     assert plan.count("Exchange") == 1
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
@@ -151,10 +150,7 @@ def test_latency_buckets_plan_two_exchanges(spark, tdata):
     """Window Exchange on conv_id + the constant-bounded (dow, hour)
     aggregate's Exchange — nothing else, no Python."""
     df, _ = tdata
-    plan = (
-        transition_latency_buckets(df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(transition_latency_buckets(df))
     assert plan.count("Exchange") == 2
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
@@ -223,10 +219,7 @@ def test_sortedness_report_plan_single_exchange(spark):
             for i in range(10)
         ],
     )
-    plan = (
-        sortedness_report(df, "t", partition_by="k", order_by="seq")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(sortedness_report(df, "t", partition_by="k", order_by="seq"))
     assert plan.count("Exchange") == 1
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
@@ -293,9 +286,6 @@ def test_hygiene_gate_no_shuffle_no_python(spark):
     df = spark.createDataFrame(
         [(1, "some text here")], "doc_id long, text string"
     )
-    plan = (
-        hygiene_gate(df, ["doc_id"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(hygiene_gate(df, ["doc_id"]))
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan

@@ -9,6 +9,7 @@ import pytest
 from tablecloth_time_spark.operators.slice import slice_time
 from tablecloth_time_spark.operators.shift import add_lag, add_lags, add_lead, add_leads
 from tablecloth_time_spark.oracle import timeops as O
+from tests.conftest import executed_plan
 
 DATES = ["2024-01-01", "2024-01-05", "2024-01-10", "2024-01-15",
          "2024-01-20", "2024-01-25", "2024-01-31"]
@@ -314,10 +315,7 @@ def test_growth_rates_validation_and_plan(spark):
         growth_rates(df, "k", "bucket", "v", unit="hour")
     with pytest.raises(ValueError, match=">= 1"):
         growth_rates(df, "k", "bucket", "v", periods={"bad": 0})
-    plan = (
-        growth_rates(df, "k", "bucket", "v")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(growth_rates(df, "k", "bucket", "v"))
     assert plan.count("Exchange") == 1
     assert "Join" not in plan and "BatchEvalPython" not in plan
 

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 
 from tablecloth_time_spark.operators.spectral import periodogram
+from tests.conftest import executed_plan
 
 HOUR_MS = 3_600_000
 
@@ -125,7 +126,7 @@ def test_periodogram_plan_single_agg_no_python(hourly_df):
     tiny per-key frame after the final aggregate."""
     pdf, sdf = hourly_df
     out = periodogram(sdf, "k", "ts", "x", periods=[24, 168], unit="hour")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "MapInPandas" not in plan
     assert "Window" not in plan and "Join" not in plan

@@ -99,36 +99,3 @@ def test_spark_submit_full_pipeline(spark, transcripts_df, tmp_path):
         )
         assert report["tiers"][tier] == len(exp)
 
-
-def test_committed_dist_zip_is_current():
-    """The committed dist/tablecloth_time_spark.zip must match the working
-    tree byte-for-byte — r4 review caught it lagging 5 library files (a
-    deploy would have ImportError'd on ccf and rejected method='ses').
-    Regenerate with `python scripts/package.py` whenever the package
-    changes."""
-    import zipfile
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    zip_path = repo / "dist" / "tablecloth_time_spark.zip"
-    assert zip_path.exists(), "dist zip missing — run scripts/package.py"
-    z = zipfile.ZipFile(zip_path)
-    names = set(z.namelist())
-    stale = []
-    pkg = repo / "tablecloth_time_spark"
-    for src in sorted(pkg.rglob("*.py")):
-        rel = src.relative_to(repo).as_posix()
-        if "__pycache__" in rel:
-            continue
-        if rel not in names:
-            stale.append(f"missing from zip: {rel}")
-        elif z.read(rel) != src.read_bytes():
-            stale.append(f"outdated in zip: {rel}")
-    extra = [
-        n for n in names
-        if n.endswith(".py") and not (repo / n).exists()
-    ]
-    stale += [f"deleted on disk but still in zip: {n}" for n in extra]
-    assert not stale, "\n".join(
-        ["dist zip is stale — run scripts/package.py:"] + stale
-    )

@@ -19,10 +19,7 @@ from tablecloth_time_spark.operators.symbolic import (
     sax_breakpoints,
     sax_words,
 )
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -119,12 +116,12 @@ def test_sax_words_and_duplicate_detection(spark):
 
 def test_paa_sax_plan_one_exchange_no_python(spark, series_df):
     df, _ = series_df
-    p = _plan(paa_sax(df, "k", "t", "v", n_segments=8))
+    p = executed_plan(paa_sax(df, "k", "t", "v", n_segments=8))
     # window Exchange only: the (k, segment) aggregate and the series
     # totals reuse the window's hash partitioning
     assert p.count("Exchange") == 1, p
     assert "BatchEvalPython" not in p and "MapInPandas" not in p
-    pw = _plan(sax_words(df, "k", "t", "v", n_segments=8))
+    pw = executed_plan(sax_words(df, "k", "t", "v", n_segments=8))
     assert pw.count("Exchange") == 1, pw
     assert "BatchEvalPython" not in pw and "MapInPandas" not in pw
 

@@ -8,6 +8,7 @@ import pytest
 
 from tablecloth_time_spark.operators.acf import acf
 from tablecloth_time_spark.operators.time_columns import add_time_columns
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -281,10 +282,7 @@ def test_ccf_plan_one_exchange_no_python(spark):
         for i in range(50)
     ]
     df = spark.createDataFrame(rows, ["k", "ts", "x", "y"])
-    plan = (
-        ccf(df, ["k"], "ts", "x", "y", 4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(ccf(df, ["k"], "ts", "x", "y", 4))
     assert "InPandas" not in plan and "Python" not in plan
     # one shuffle for the window/aggregate + whatever AQE reads add; the
     # window sort and the final agg share the key partitioning

@@ -27,6 +27,7 @@ from tablecloth_time_spark.functions.literals import (
     parse_time_literal,
     to_time_literal,
 )
+from tests.conftest import executed_plan
 
 
 def _one(spark, col):
@@ -502,6 +503,6 @@ def test_literals_plan_is_pure_codegen(spark):
         ).alias("b"),
         fmt_duration_iso(F.col("id") * 1000).alias("c"),
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     assert out.count() == 10

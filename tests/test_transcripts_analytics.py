@@ -16,6 +16,7 @@ from tablecloth_time_spark.operators.transcripts import (
 from tablecloth_time_spark.sources.transcripts import (
     generate_transcripts_pandas,
 )
+from tests.conftest import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -134,10 +135,7 @@ def test_conversation_stats_plan_single_exchange(spark, tdata):
     """The lag window's Exchange on conv_id is REUSED by the groupBy
     (same key): one shuffle total, no Python."""
     df, _ = tdata
-    plan = (
-        conversation_stats(df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(conversation_stats(df))
     assert plan.count("Exchange") == 1
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
@@ -146,10 +144,7 @@ def test_role_transitions_plan_two_exchanges(spark, tdata):
     """Window Exchange on conv_id + the tiny role-pair aggregate's
     Exchange — nothing else, no Python."""
     df, _ = tdata
-    plan = (
-        role_transitions(df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(role_transitions(df))
     assert plan.count("Exchange") == 2
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
@@ -319,7 +314,7 @@ def test_budget_prefix_plan(spark, tdata):
     out = budget_prefix(
         df.withColumn("n_tokens", F.length("text")), budget=600
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange") == 1
     assert "Python" not in plan and "MapInPandas" not in plan
 
@@ -333,7 +328,7 @@ def test_sequence_fingerprints_validation_and_plan(spark, tdata):
     with pytest.raises(ValueError, match="hash_fn"):
         sequence_fingerprints(df, hash_fn="sha1")
     out = sequence_fingerprints(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     # the aggregate reuses the row_number window's hash partitioning —
     # one Exchange total (the item column DOES cross it on this path;
     # the positions path below is the text-never-moves one)
@@ -368,11 +363,10 @@ def test_sequence_fingerprints_positions_path(spark, tdata):
     # fresh (unexecuted) plan — a collected AQE plan prints Initial +
     # Final sections and double-counts the Exchange
     plan = (
-        sequence_fingerprints(
+        executed_plan(sequence_fingerprints(
             df, "conv_id", item_col="text", hash_fn="md5",
             positions="turn_idx",
-        )
-        ._jdf.queryExecution().executedPlan().toString()
+        ))
     )
     assert "Window" not in plan  # no row_number — tags come from the table
     assert plan.count("Exchange") == 1
