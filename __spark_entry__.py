@@ -5670,11 +5670,13 @@ def q_compressed_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slice served FROM the compressed tier, oracle-checked end-to-end:
     rollup the events to a minute tier, encode it into Gorilla/DoD daily
     blocks, then answer an inclusive [from, to] slice with
-    read_blocks_slice (operators/compress.py:706) — whole blocks outside
-    the range are pruned by a plain block_start predicate BEFORE any
-    decode (parquet min-max file skipping when the block table is laid
-    out by block_start), only the ~7 touched conversation-days of 30
-    decode, and the exact per-point predicate is applied after. DuckDB
+    read_blocks_slice (operators/compress.py) — whole blocks outside
+    the range are dropped by a plain block_start predicate BEFORE any
+    decode, so only the ~7 touched conversation-days of 30 decode, and
+    the exact per-point predicate is applied after. The blocks here are
+    computed in the plan, not read from a table, so nothing skips files;
+    and a stored block table would not skip them either on block_start,
+    since Spark pushes no filter into INT96 timestamp columns. DuckDB
     computes the same minute rollup directly from raw rows and filters
     the same range: a hash match proves the compressed serving path is
     bit-equal to the raw path (the reference's slice semantics,

@@ -690,7 +690,9 @@ def decompress_blocks(
             lens = [len(t) for t in ts_parts]
             out = {
                 "conv_id": np.repeat(pdf["conv_id"].to_numpy(), lens),
-                "ts": pd.to_datetime(np.concatenate(ts_parts), unit="ms"),
+                # UTC-aware: Arrow reads naive timestamps as session-zone
+                # wall clock, which would shift every point off UTC
+                "ts": pd.to_datetime(np.concatenate(ts_parts), unit="ms", utc=True),
             }
             for c, codec in value_cols.items():
                 dec = decode_floats_xor if codec == "float" else decode_ints_dod
@@ -717,18 +719,32 @@ def read_blocks_slice(
     per point — the reference's slice semantics (slice_time) over the
     Gorilla/DoD representation.
 
-    The block filter is a plain range predicate on ``block_start``, so
-    when block tables are written sorted/partitioned by block_start (the
-    tier layout run_pipeline.py uses for tiers) parquet min-max stats
-    skip non-overlapping files BEFORE any decode — a narrow slice of a
-    10^12-point compressed store decodes only the touched
-    conversation-days, never the archive.
+    What skips data before the decode:
+
+    - ``p_date`` partition pruning, when ``blocks`` has that column (the
+      block tables :class:`~tablecloth_time_spark.plans.continuous.
+      ContinuousAggregate` writes, partitioned by the date of
+      ``block_start``): the slice also filters ``p_date`` to
+      [date(from − block length) − 1 day, date(to) + 1 day], so Spark
+      lists and opens only the day directories the window touches. The
+      one-day margin covers the session time zone the partition dates were
+      written in, so the prune never drops a block the window needs.
+    - The ``block_start`` extent predicate drops non-overlapping blocks
+      row by row after the scan and before any Python runs. It does NOT
+      skip files or row groups: Spark writes timestamps as INT96 by
+      default and pushes no filter into INT96 Parquet columns, so the
+      predicate is listed under ``PushedFilters`` but min/max statistics
+      are never consulted.
+
+    Frames without ``p_date`` (bare :func:`compress_series` output) are
+    pruned by the extent predicate alone.
 
     Calendar block units (month/quarter/year) prune with a conservative
     fixed upper bound on the extent (31/92/366 days) — the exact
     per-point predicate makes the over-approximation harmless.
     """
     from tablecloth_time_spark.operators.slice import _key_sort_value, parse_key
+    from tablecloth_time_spark.plans.tier_store import P_DATE
 
     # same key normalization as slice_time: dates -> midnight, tz-aware
     # datetimes -> naive UTC wall clock
@@ -742,13 +758,20 @@ def read_blocks_slice(
         block_ms = block_interval * days * 86_400_000
     else:
         block_ms = block_interval * milliseconds_in(u)
+    first_start = lo - dt.timedelta(milliseconds=block_ms)
     # block extent [start, start + block_ms) intersects [lo, hi] — pure
     # wall-clock timestamp comparisons, so the prune and the per-point
     # predicate agree regardless of the session time zone
     pruned = blocks.filter(
-        (F.col("block_start") <= F.lit(hi))
-        & (F.col("block_start") > F.lit(lo - dt.timedelta(milliseconds=block_ms)))
+        (F.col("block_start") <= F.lit(hi)) & (F.col("block_start") > F.lit(first_start))
     )
+    if P_DATE in blocks.columns:
+        # p_date is block_start's date in the writing session's zone, at most
+        # one day off its UTC date
+        day = dt.timedelta(days=1)
+        pruned = pruned.filter(
+            F.col(P_DATE).between(F.lit(first_start.date() - day), F.lit(hi.date() + day))
+        )
     points = decompress_blocks(pruned, value_cols)
     return points.filter(
         (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))

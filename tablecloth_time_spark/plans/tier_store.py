@@ -21,7 +21,8 @@ protocol method      Iceberg binding
 ``read_state``       ``spark.table(tier_table)``
 ``tier_exists``      catalog ``tableExists`` + non-empty partition list
 ``list_partitions``  ``SELECT DISTINCT p_date`` / partitions metadata table
-``drop_partitions``  metadata-only ``ALTER TABLE ... DROP PARTITION``
+``drop_partitions``  metadata-only ``ALTER TABLE ... DROP PARTITION`` on the
+                     tier table AND its blocks table
 ``write_blocks``     dynamic-overwrite insert into the blocks table
 ``read_blocks``      ``spark.table(blocks_table)``
 ==================  =========================================================
@@ -41,7 +42,14 @@ Contract details the engine relies on:
   (staged data already swapped in, token gone) must succeed as a no-op.
   Because staged content is absolute, a replayed commit can never
   double-merge.
-- ``drop_partitions`` must be O(partitions) metadata work, never a rewrite.
+- ``drop_partitions(tier, partitions)`` must be O(partitions) metadata
+  work, never a rewrite. It drops the same ``p_date`` partitions of the
+  tier's blocks table too (a block's ``p_date`` is the date of its
+  ``block_start``), so a retention expiry never leaves the compressed tier
+  serving points its tier no longer holds.
+- ``read_state`` / ``read_blocks`` return a frame over the store's state
+  as of the call: a commit made since the previous read, by this or any
+  other process, shows up on the next one.
 """
 
 from __future__ import annotations
@@ -53,6 +61,7 @@ from typing import Protocol
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 P_DATE = "p_date"
 
@@ -80,11 +89,29 @@ class TierStore(Protocol):
 class ParquetTierStore:
     """Partitioned-parquet store: stage to a side directory, commit by
     per-partition ``os.replace`` (the filesystem analogue of Iceberg's
-    commit-by-metadata-swap)."""
+    commit-by-metadata-swap).
+
+    Each table's schema is inferred once, on its first read, and every later
+    read supplies it: inferring it again costs a Spark job that reads
+    Parquet footers. The file listing is not cached, so every read sees the
+    partitions committed up to that moment."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._schemas: dict[str, StructType] = {}  # table path -> schema
+
+    def _read(self, path: str, schema_of: str | None = None) -> DataFrame:
+        """Read the partitioned table at ``path`` with the cached schema of
+        the table at ``schema_of`` (default: ``path`` itself); the first
+        read infers that schema and caches it."""
+        key = schema_of or path
+        schema = self._schemas.get(key)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[key] = df.schema
+        return df
 
     def _tier_path(self, tier: str) -> str:
         return os.path.join(self.root, "tiers", tier)
@@ -99,7 +126,7 @@ class ParquetTierStore:
         )
 
     def read_state(self, tier: str) -> DataFrame:
-        return self.spark.read.parquet(self._tier_path(tier))
+        return self._read(self._tier_path(tier))
 
     def stage(
         self, tier: str, merged: DataFrame, dirty: list[str], run_id: str
@@ -116,10 +143,12 @@ class ParquetTierStore:
                 "rows_out": 0,
             }
         merged.write.mode("overwrite").partitionBy(P_DATE).parquet(staged_path)
-        # per-partition lineage from the staged files (one row per day)
+        # per-partition lineage from the staged files (one row per day);
+        # staged content has the live tier's schema, so this read fills or
+        # reuses the tier's cached schema
         part_counts = {
             r[0]: r[1]
-            for r in self.spark.read.parquet(staged_path)
+            for r in self._read(staged_path, schema_of=self._tier_path(tier))
             .groupBy(F.col(P_DATE).cast("string").alias(P_DATE))
             .count()
             .collect()
@@ -163,9 +192,9 @@ class ParquetTierStore:
         )
 
     def drop_partitions(self, tier: str, partitions: list[str]) -> None:
-        path = self._tier_path(tier)
-        for d in partitions:
-            shutil.rmtree(os.path.join(path, f"{P_DATE}={d}"), ignore_errors=True)
+        for path in (self._tier_path(tier), self._blocks_path(tier)):
+            for d in partitions:
+                shutil.rmtree(os.path.join(path, f"{P_DATE}={d}"), ignore_errors=True)
 
     def write_blocks(self, tier: str, blocks: DataFrame) -> None:
         (
@@ -176,7 +205,7 @@ class ParquetTierStore:
         )
 
     def read_blocks(self, tier: str) -> DataFrame:
-        return self.spark.read.parquet(self._blocks_path(tier))
+        return self._read(self._blocks_path(tier))
 
 
 class MemoryTierStore:
@@ -238,9 +267,9 @@ class MemoryTierStore:
         return sorted(self._tiers.get(tier, {}))
 
     def drop_partitions(self, tier: str, partitions: list[str]) -> None:
-        live = self._tiers.get(tier, {})
-        for d in partitions:
-            live.pop(d, None)
+        for live in (self._tiers.get(tier, {}), self._blocks.get(tier, {})):
+            for d in partitions:
+                live.pop(d, None)
 
     def write_blocks(self, tier: str, blocks: DataFrame) -> None:
         # dynamic-partition semantics like the parquet store: a refresh

@@ -332,19 +332,48 @@ def test_memory_store_full_lifecycle_no_paths(spark, tmp_path, batches):
 
     assert sorted(os.listdir(str(tmp_path / "agg"))) == ["manifest.json"]
 
-    # retention drops partitions through the store
-    max_date = full.agg(F.max(F.to_date("ts"))).collect()[0][0]
-    expired = ca.expire(str(max_date))
-    if "minute" in expired:
-        import datetime as dt
+    # retention drops partitions through the store, blocks included
+    _assert_blocks_expire_with_tier(ca, full)
 
-        horizon = max_date - dt.timedelta(days=30)
-        assert (
-            ca.read_tier("minute")
-            .filter(F.to_date("bucket") < str(horizon))
-            .count()
-            == 0
-        )
+
+def test_parquet_store_blocks_expire_with_tier(spark, tmp_path, batches):
+    """Expiring the compressed tier drops its block partitions too, so a
+    block slice never serves points the tier no longer holds."""
+    df1, df2 = batches
+    src, ca = _make_ca(
+        spark, str(tmp_path / "src"), str(tmp_path / "agg"),
+        compress=CompressSpec(tier="minute", value_cols={"n_turns": "int"}),
+    )
+    src.append(df1)
+    ca.refresh()
+    src.append(df2)
+    ca.refresh()
+    _assert_blocks_expire_with_tier(ca, df1.unionByName(df2))
+
+
+def _assert_blocks_expire_with_tier(ca, full):
+    """Expire the minute tier (30-day retention) as of 15 days after the
+    last turn, so about half its partitions go; no block partition below
+    the horizon may survive, and a block slice over all time returns
+    exactly the points the minute tier still holds."""
+    import datetime as dt
+
+    from tablecloth_time_spark.operators.compress import read_blocks_slice
+
+    max_date = full.agg(F.max(F.to_date("ts"))).collect()[0][0]
+    horizon = str(max_date - dt.timedelta(days=15))
+    expired = ca.expire(str(max_date + dt.timedelta(days=15)))
+    assert expired["minute"] and max(expired["minute"]) < horizon
+    tier = ca.read_tier("minute")
+    assert tier.filter(F.to_date("bucket") < horizon).count() == 0
+    block_days = {
+        str(r[0]) for r in ca.read_blocks("minute").select("p_date").distinct().collect()
+    }
+    assert block_days and min(block_days) >= horizon
+    pts = read_blocks_slice(
+        ca.read_blocks("minute"), {"n_turns": "int"}, "2000-01-01", "2100-01-01"
+    )
+    assert pts.count() == tier.count() > 0
 
 
 def test_memory_store_commit_replay_idempotent(spark):
