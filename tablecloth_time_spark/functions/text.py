@@ -268,11 +268,6 @@ def fingerprint_md5(c: str | Column) -> Column:
     return F.md5(normalize_text(c))
 
 
-def fingerprint_xxhash(c: str | Column) -> Column:
-    """Engine-internal 64-bit fingerprint (faster; JVM codegen)."""
-    return F.xxhash64(normalize_text(c))
-
-
 def hash64_md5(c: str | Column) -> Column:
     """Cross-engine 60-bit hash: integer of the first 15 hex chars of md5.
 

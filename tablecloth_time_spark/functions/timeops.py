@@ -54,10 +54,6 @@ def from_epoch_millis(col: Column | str) -> Column:
     return F.timestamp_millis(_c(col).cast("long"))
 
 
-def to_epoch_seconds(col: Column | str) -> Column:
-    return F.unix_seconds(_c(col).cast("timestamp"))
-
-
 def to_epoch_micros(col: Column | str) -> Column:
     return F.unix_micros(_c(col).cast("timestamp"))
 
@@ -635,11 +631,6 @@ def is_quarter_start(col: Column | str) -> Column:
 def is_quarter_end(col: Column | str) -> Column:
     c = _c(col)
     return is_month_end(c) & (F.month(c) % 3 == 0)
-
-
-def is_year_start(col: Column | str) -> Column:
-    c = _c(col)
-    return (F.dayofmonth(c) == 1) & (F.month(c) == 1)
 
 
 def is_year_end(col: Column | str) -> Column:

@@ -727,8 +727,11 @@ def read_blocks_slice(
       ``block_start``): the slice also filters ``p_date`` to
       [date(from − block length) − 1 day, date(to) + 1 day], so Spark
       lists and opens only the day directories the window touches. The
-      one-day margin covers the session time zone the partition dates were
-      written in, so the prune never drops a block the window needs.
+      store files each block under the UTC date of ``block_start``
+      (``plans.tier_store.partition_date``); the one-day margin also
+      covers block tables written when ``p_date`` was the writing
+      session's local date, so the prune never drops a block the window
+      needs.
     - The ``block_start`` extent predicate drops non-overlapping blocks
       row by row after the scan and before any Python runs. It does NOT
       skip files or row groups: Spark writes timestamps as INT96 by
@@ -766,8 +769,9 @@ def read_blocks_slice(
         (F.col("block_start") <= F.lit(hi)) & (F.col("block_start") > F.lit(first_start))
     )
     if P_DATE in blocks.columns:
-        # p_date is block_start's date in the writing session's zone, at most
-        # one day off its UTC date
+        # p_date is block_start's UTC date (tier_store.partition_date); a
+        # table written under the older session-local rule is at most one
+        # day off it, which the margin keeps
         day = dt.timedelta(days=1)
         pruned = pruned.filter(
             F.col(P_DATE).between(F.lit(first_start.date() - day), F.lit(hi.date() + day))

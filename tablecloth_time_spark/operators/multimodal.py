@@ -63,13 +63,6 @@ def real_image_decode(payload: bytes) -> np.ndarray:
     )
 
 
-def real_audio_decode(payload: bytes) -> np.ndarray:
-    raise NotImplementedError(
-        "audio decode requires soundfile/ffmpeg, not in this container; "
-        "inject a Codec or use fake_decode for tests"
-    )
-
-
 def fake_decode(feature_dim: int = 16) -> Codec:
     """Deterministic stand-in codec: payload bytes -> fixed-dim float32.
 

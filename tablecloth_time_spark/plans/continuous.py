@@ -11,15 +11,16 @@ Design (scale-first):
   an increment merges exactly without re-reading history. The finalized
   user view is a projection (`read_tier`).
 - **Dirty-partition rewrite, never full rewrite.** Tier state is
-  partitioned by ``p_date = date(bucket)``. An increment touches only the
-  (conv_id, bucket) groups it contains; only the p_date partitions holding
-  those buckets are read back, merged, STAGED to a side directory, and
-  committed by per-partition renames (stage-and-swap). The staged output is
-  the absolute new partition content, so replaying the commit after a crash
-  is idempotent — an increment can never merge into live state twice. At
-  10^12 turns with a 30-day hot window, a daily increment rewrites ~1/365th
-  of each tier, not the tier. (On real Iceberg, stage-and-swap becomes the
-  table format's atomic metadata commit.)
+  partitioned by ``p_date``, the UTC date of ``bucket``. An increment
+  touches only the (conv_id, bucket) groups it contains; only the p_date
+  partitions holding those buckets are read back, merged, STAGED to a side
+  directory, and committed by per-partition renames (stage-and-swap). The
+  staged output is the absolute new partition content, so replaying the
+  commit after a crash is idempotent — an increment can never merge into
+  live state twice. At 10^12 turns with a 30-day hot window, a daily
+  increment rewrites ~1/365th of each tier, not the tier. (On real
+  Iceberg, stage-and-swap becomes the table format's atomic metadata
+  commit.)
 - **One scan for all tiers.** The increment is partially aggregated once at
   the finest tier; coarser tiers re-merge those partials (sums of sums) —
   the same operators/rollup.cascade_partials that rollup_cascade
@@ -62,6 +63,7 @@ from tablecloth_time_spark.plans.tier_store import (
     P_DATE,
     ParquetTierStore,
     TierStore,
+    partition_date,
 )
 
 BUCKET = "bucket"
@@ -267,9 +269,7 @@ class ContinuousAggregate:
         swap) so a crash at any point either recomputes the stage or
         replays the swap — the increment can never be merged into live
         state twice."""
-        new_partial = tier_partial.withColumn(
-            P_DATE, F.date_format(BUCKET, "yyyy-MM-dd")
-        )
+        new_partial = tier_partial.withColumn(P_DATE, partition_date(BUCKET))
 
         dirty = [r[0] for r in new_partial.select(P_DATE).distinct().collect()]
         if self.store.tier_exists(tier.name):
@@ -280,7 +280,7 @@ class ContinuousAggregate:
                 old.drop(P_DATE).unionByName(new_partial.drop(P_DATE)),
                 self.keys,
                 self.aggs,
-            ).withColumn(P_DATE, F.date_format(BUCKET, "yyyy-MM-dd"))
+            ).withColumn(P_DATE, partition_date(BUCKET))
         else:
             merged = new_partial
         return self.store.stage(tier.name, merged, dirty, run_id)
@@ -298,7 +298,7 @@ class ContinuousAggregate:
             value_cols=spec.value_cols,
             key_col=self.keys[0],
             block_unit="day",
-        ).withColumn(P_DATE, F.date_format("block_start", "yyyy-MM-dd"))
+        ).withColumn(P_DATE, partition_date("block_start"))
         stats = blocks.agg(
             F.sum("raw_bytes").alias("raw"),
             F.sum("enc_bytes").alias("enc"),

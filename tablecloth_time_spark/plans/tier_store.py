@@ -44,9 +44,10 @@ Contract details the engine relies on:
   double-merge.
 - ``drop_partitions(tier, partitions)`` must be O(partitions) metadata
   work, never a rewrite. It drops the same ``p_date`` partitions of the
-  tier's blocks table too (a block's ``p_date`` is the date of its
-  ``block_start``), so a retention expiry never leaves the compressed tier
-  serving points its tier no longer holds.
+  tier's blocks table too (tier rows and blocks both file under the UTC
+  date of ``bucket`` / ``block_start``, see :func:`partition_date`), so a
+  retention expiry never leaves the compressed tier serving points its
+  tier no longer holds.
 - ``read_state`` / ``read_blocks`` return a frame over the store's state
   as of the call: a commit made since the previous read, by this or any
   other process, shows up on the next one.
@@ -59,11 +60,23 @@ import shutil
 from typing import Protocol
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tablecloth_time_spark.functions.timeops import to_epoch_millis
+
 P_DATE = "p_date"
+
+
+def partition_date(ts: Column | str) -> Column:
+    """The ``p_date`` partition string ("yyyy-MM-dd") of a timestamp: its
+    UTC date, whatever the session time zone. Tier rows (by ``bucket``)
+    and blocks (by ``block_start``) share this one rule, so a UTC-day block
+    lands in the same partition as the tier rows it encodes, and a refresh
+    that rewrites a dirty tier day rewrites exactly that day's blocks."""
+    day = F.floor(to_epoch_millis(ts) / 86_400_000).cast("int")
+    return F.date_from_unix_date(day).cast("string")
 
 
 class TierStore(Protocol):

@@ -9,37 +9,97 @@ state: ``applyInPandasWithState`` keeps one small state blob per key in
 the state store (checkpointed, exactly-once with the sink contract) and
 hands each micro-batch's rows for that key to a vectorized pandas kernel.
 
-``streaming_counter_rate`` is the batch ``operators/counters.counter_rate``
-re-expressed for streams: state = (last_ts_ms, last_value) — constant
-size per key, unbounded keys bounded only by key cardinality (NOT by
-time, hence no watermark requirement).
+Every twin here is the same composition: a projection of the stream, then
+one pure ``step(pdf, state) -> (new_state | None, out | None)`` folded per
+key by ``_keyed_fold``. The harness owns everything the twins share:
 
-Ordering contract: WITHIN a micro-batch rows are sorted by the kernel;
-ACROSS micro-batches samples of a key are assumed in-order (the standard
-contract for scrape/metric pipelines — a sample older than the key's
-state is flagged ``out_of_order`` with null delta/rate rather than
-silently differenced against the wrong predecessor).
+- concatenating the micro-batch's frames for the key (an empty group
+  emits nothing);
+- a STABLE sort on the twin's sort column (``ts_ms``, ``pos`` or the
+  caller's order column; none for ``streaming_type_entropy``, whose
+  fold is order-free);
+- reading the state (``None`` for a key never seen) and writing it only
+  when ``step`` returns one — ``None`` keeps the carried state as is;
+- emitting only a non-empty output, with the key column, in the input's
+  type, prepended to the output schema;
+- the single ``applyInPandasWithState`` call on ``groupBy(key)``, in
+  append mode with no timeout.
+
+The shared ordering and state contract (each twin's docstring refers
+here rather than restating it):
+
+- WITHIN a micro-batch rows are sorted by the harness; ACROSS
+  micro-batches a key's rows are assumed to arrive in order (the standard
+  contract for scrape/metric pipelines).
+- A row older than the key's carried state is LATE: it is flagged
+  ``out_of_order`` with null derived fields rather than silently
+  differenced against the wrong predecessor. In a batch mixing late and
+  in-order rows, an in-order row's predecessor is the carried state, not
+  the late row; ``_effective_prev`` owns that rule for every twin that
+  differences neighbors.
+- State never moves backward: a wholly-late micro-batch leaves it as is,
+  and the update is STRICTLY forward — a replay carrying exactly the
+  state's position keeps the existing state (ties keep state), so the
+  first delivery stays the predecessor.
+- State per key is constant-size (or bounded by a vocabulary), so it is
+  bounded by key cardinality, not by time: no watermark is needed.
+- Output is append-only. Where a twin has a batch operator, its streamed
+  output on a closed in-order input is pinned equal to that operator by
+  the tests.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from tablecloth_time_spark.functions.timeops import to_epoch_millis
+from tablecloth_time_spark.functions.units import milliseconds_in, normalize_unit
+
+
+def _ddl_field(df: DataFrame, col: str) -> str:
+    """``col`` as a DDL field with its type in ``df``."""
+    return f"`{col.replace('`', '``')}` {df.schema[col].dataType.simpleString()}"
+
+
+def _keyed_fold(
+    base: DataFrame,
+    key_col: str,
+    sort_col: str | None,
+    out_ddl: str,
+    state_ddl: str,
+    step: Callable[[pd.DataFrame, tuple | None], tuple],
+) -> DataFrame:
+    """Fold ``step`` per ``key_col`` group across micro-batches of
+    ``base`` (the module docstring lists what this owns). ``out_ddl`` and
+    ``state_ddl`` are DDL field lists; the key field is prepended to the
+    output with the input's type."""
+
+    def kernel(key, pdfs, state: GroupState):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if not len(pdf):
+            return
+        if sort_col is not None:
+            pdf = pdf.sort_values(sort_col, kind="stable")
+        new_state, out = step(pdf, state.get if state.exists else None)
+        if new_state is not None:
+            state.update(new_state)
+        if out is not None and len(out):
+            out.insert(0, key_col, pdf[key_col].iloc[0])
+            yield out
+
+    return base.groupBy(key_col).applyInPandasWithState(
+        kernel,
+        f"{_ddl_field(base, key_col)}, {out_ddl}",
+        state_ddl,
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
 
 
 def _effective_prev(
@@ -72,6 +132,11 @@ def _effective_prev(
     return prev_ms, has_prev, use_state
 
 
+def _moves_forward(last: int, carried: int | None) -> bool:
+    """The strict-forward state rule: ties keep the carried state."""
+    return carried is None or int(last) > carried
+
+
 def streaming_counter_rate(
     stream: DataFrame,
     key_col: str,
@@ -79,39 +144,21 @@ def streaming_counter_rate(
     value_col: str,
     reset_aware: bool = True,
 ) -> DataFrame:
-    """Streaming reset-aware counter delta/rate with per-key state.
+    """Streaming reset-aware counter delta/rate with per-key state — the
+    batch ``operators/counters.counter_rate`` re-expressed for streams:
+    state = (last_ts_ms, last_value). Ordering, late-row and state rules
+    are the module's shared contract.
 
     Output (append, one row per input sample): key, ts_ms, value, delta,
     rate_per_s, out_of_order. First sample of a key ever seen -> null
     delta/rate. Semantics match batch ``counter_rate`` when samples arrive
     in order (pinned by tests/test_streaming.py).
     """
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("value", DoubleType()),
-            StructField("delta", DoubleType()),
-            StructField("rate_per_s", DoubleType()),
-            StructField("out_of_order", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("last_ms", LongType()), StructField("last_v", DoubleType())]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
         v = pdf["value"].to_numpy(dtype=np.float64)
-        if state.exists:
-            last_ms, last_v = state.get
-        else:
-            last_ms, last_v = None, None
+        last_ms, last_v = state or (None, None)
 
         prev_ms, has_prev, use_state = _effective_prev(ms, last_ms)
         prev_v = np.roll(v, 1)
@@ -126,26 +173,19 @@ def streaming_counter_rate(
         dt_s = (ms - prev_ms) / 1000.0
         with np.errstate(divide="ignore", invalid="ignore"):
             rate = np.where(dt_s > 0, delta / dt_s, np.nan)
-        delta = np.where(has_prev & ~ooo, delta, np.nan)
-        rate = np.where(has_prev & ~ooo, rate, np.nan)
+        ok = has_prev & ~ooo
 
-        # never move state backward: a wholly-late micro-batch (batch max
-        # older than the carried state) must not regress last_ms, or the
-        # NEXT in-order sample would difference against the wrong
-        # predecessor (rows are sorted, so ms[-1] is the batch max).
-        # STRICTLY greater: a replayed duplicate carrying the exact state
-        # timestamp must not overwrite last_v with the replayed value —
-        # the first delivery's value stays the predecessor (ties keep
-        # existing state).
-        if last_ms is None or int(ms[-1]) > last_ms:
-            state.update((int(ms[-1]), float(v[-1])))
-        yield pd.DataFrame(
+        # rows are sorted, so ms[-1] is the batch max; a replay at exactly
+        # last_ms must not overwrite last_v (ties keep state)
+        new = None
+        if _moves_forward(ms[-1], last_ms):
+            new = (int(ms[-1]), float(v[-1]))
+        return new, pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy(),
                 "ts_ms": ms,
                 "value": v,
-                "delta": delta,
-                "rate_per_s": rate,
+                "delta": np.where(ok, delta, np.nan),
+                "rate_per_s": np.where(ok, rate, np.nan),
                 "out_of_order": ooo,
             }
         )
@@ -155,13 +195,20 @@ def streaming_counter_rate(
         to_epoch_millis(ts_col).alias("ts_ms"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        base, key_col, "ts_ms",
+        "ts_ms bigint, value double, delta double, rate_per_s double, "
+        "out_of_order boolean",
+        "last_ms bigint, last_v double",
+        step,
     )
+
+
+def _clipped_cumsum(x: np.ndarray, s0: float) -> np.ndarray:
+    """max(0, s + x) recurrence from ``s0``, as one prefix identity."""
+    prefix = np.cumsum(x)
+    runmin = np.minimum.accumulate(prefix)
+    return prefix - np.minimum(runmin, -s0)
 
 
 def streaming_cusum(
@@ -182,7 +229,7 @@ def streaming_cusum(
     stream cannot know — calibrate offline (e.g. the batch operator's
     broadcast stats) and attach via a stream-static join, or ``F.lit``
     constants for a fixed reference. State per key is just the pair
-    (S+, S-) — 16 bytes, no watermark needed.
+    (S+, S-) — 16 bytes.
 
     Within a micro-batch the clipped recurrence is vectorized with the
     same prefix identity the batch plan uses, extended by the carried
@@ -191,9 +238,8 @@ def streaming_cusum(
         S+_t = P_t - min(running_min(P), -s0)
 
     (the extra candidate ``-s0`` is the carry: S+_t >= s0 + P_t).
-    Samples are assumed in-order per key across micro-batches (the
-    ``streaming_counter_rate`` contract); rows are sorted within each
-    batch. Null values contribute zero drift and emit the carried score
+    Ordering follows the module's shared contract. Null values contribute
+    zero drift and emit the carried score
     (matching the batch plan, where null terms pass through the window
     sum); rows BEFORE a key's first valid sample emit null scores, again
     matching batch (the window sum over all-null terms is NULL) — state
@@ -205,43 +251,11 @@ def streaming_cusum(
 
     Output (append): key, ts_ms, value, cusum_pos, cusum_neg, is_drift.
     """
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("value", DoubleType()),
-            StructField("cusum_pos", DoubleType()),
-            StructField("cusum_neg", DoubleType()),
-            StructField("is_drift", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sp", DoubleType()), StructField("sn", DoubleType())]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         v = pdf["value"].to_numpy(dtype=np.float64)
         mu = pdf["__mu"].to_numpy(dtype=np.float64)
         sd = pdf["__sd"].to_numpy(dtype=np.float64)
-
-        def frame(sp: np.ndarray, sn: np.ndarray) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "ts_ms": pdf["ts_ms"].to_numpy(dtype=np.int64),
-                    "value": v,
-                    "cusum_pos": sp,
-                    "cusum_neg": sn,
-                    "is_drift": np.where(
-                        np.isnan(sp), False, (sp > h) | (sn > h)
-                    ).astype(bool),
-                }
-            )
 
         # PER-ROW baseline validity (mu/sd may ride the stream as
         # columns, so a batch can MIX valid and invalid-sd rows): an
@@ -259,35 +273,37 @@ def streaming_cusum(
 
         # batch parity for series HEADS: before the key's first valid
         # sample the batch window sum is over all-null terms -> NULL
-        # score. State absent == "no valid sample seen yet".
-        if state.exists:
-            sp0, sn0 = state.get
-            start = 0
-        else:
+        # score. State absent == "no valid sample seen yet"; a batch with
+        # no valid sample for such a key emits all-null scores and
+        # leaves the state absent.
+        if state is None:
             valid_idx = np.flatnonzero(~nan_z)
-            if not len(valid_idx):
-                nulls = np.full(len(v), np.nan)
-                yield frame(nulls, nulls)
-                return
-            sp0, sn0 = 0.0, 0.0
-            start = int(valid_idx[0])
-
-        def one_sided(x: np.ndarray, s0: float) -> np.ndarray:
-            prefix = np.cumsum(x)
-            runmin = np.minimum.accumulate(prefix)
-            return prefix - np.minimum(runmin, -s0)
+            start = int(valid_idx[0]) if len(valid_idx) else len(v)
+            sp0 = sn0 = 0.0
+        else:
+            (sp0, sn0), start = state, 0
 
         sp = np.full(len(v), np.nan)
         sn = np.full(len(v), np.nan)
-        sp[start:] = one_sided(xp[start:], sp0)
-        sn[start:] = one_sided(xn[start:], sn0)
-        state.update((float(sp[-1]), float(sn[-1])))
+        sp[start:] = _clipped_cumsum(xp[start:], sp0)
+        sn[start:] = _clipped_cumsum(xn[start:], sn0)
+        new = (float(sp[-1]), float(sn[-1])) if start < len(v) else None
         # emit null (not carried) scores on invalid-sd rows — the
-        # documented contract; the state update above already took the
+        # documented contract; the state above already took the
         # pass-through trajectory value
         sp = np.where(bad_sd, np.nan, sp)
         sn = np.where(bad_sd, np.nan, sn)
-        yield frame(sp, sn)
+        return new, pd.DataFrame(
+            {
+                "ts_ms": pdf["ts_ms"].to_numpy(dtype=np.int64),
+                "value": v,
+                "cusum_pos": sp,
+                "cusum_neg": sn,
+                "is_drift": np.where(
+                    np.isnan(sp), False, (sp > h) | (sn > h)
+                ).astype(bool),
+            }
+        )
 
     base = stream.select(
         key_col,
@@ -296,12 +312,12 @@ def streaming_cusum(
         F.col(mu_col).cast("double").alias("__mu"),
         F.col(sd_col).cast("double").alias("__sd"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        base, key_col, "ts_ms",
+        "ts_ms bigint, value double, cusum_pos double, cusum_neg double, "
+        "is_drift boolean",
+        "sp double, sn double",
+        step,
     )
 
 
@@ -317,17 +333,15 @@ def streaming_detect_gaps(
     state, so a backfill pipeline learns about a missing span the moment
     the sample that CLOSES it arrives instead of at the next batch scan.
 
-    State per key is a single int64 (last ts in ms). Within a micro-batch
-    rows are sorted and differenced against their effective predecessor
-    (in-batch neighbor, or the carried state when the neighbor is late —
-    the ``streaming_counter_rate`` contract). Emitted rows (append):
+    State per key is a single int64 (last ts in ms); rows difference
+    against their effective predecessor (the module's shared contract).
+    Emitted rows (append):
 
     - a gap row per consecutive pair more than ``threshold`` ``unit``s
       apart: (key, gap_start_ms, gap_end_ms, gap_s, out_of_order=false),
       matching batch ``detect_gaps`` exactly on in-order input;
     - a flagged row per LATE sample (older than its effective
-      predecessor): gap_s null, out_of_order=true — lateness is surfaced,
-      never silently differenced (and never updates state backward).
+      predecessor): gap_s null, out_of_order=true.
 
     The first sample of a key ever seen opens the series: no gap row.
     Unlike the watermark-timer approach (which can report a *still-open*
@@ -335,64 +349,34 @@ def streaming_detect_gaps(
     when it closes, which is what a gap-FILL pipeline needs (only closed
     gaps are fillable).
     """
-    from tablecloth_time_spark.functions.units import (
-        milliseconds_in,
-        normalize_unit,
-    )
-
     thresh_ms = threshold * milliseconds_in(normalize_unit(unit))
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("gap_start_ms", LongType()),
-            StructField("gap_end_ms", LongType()),
-            StructField("gap_s", DoubleType()),
-            StructField("out_of_order", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("last_ms", LongType())])
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
-        last_ms = state.get[0] if state.exists else None
+        last_ms = state[0] if state else None
 
         prev_ms, has_prev, _ = _effective_prev(ms, last_ms)
         ooo = has_prev & (ms < prev_ms)
         gap_ms = ms - prev_ms  # float64; ms values are far below 2**53
         emit = (has_prev & ~ooo & (gap_ms > thresh_ms)) | ooo
 
-        # strict >: an exact-timestamp replay keeps the existing state
-        # (same tie rule as streaming_counter_rate)
-        if last_ms is None or int(ms[-1]) > last_ms:
-            state.update((int(ms[-1]),))
-        if not emit.any():
-            return
-        yield pd.DataFrame(
+        new = (int(ms[-1]),) if _moves_forward(ms[-1], last_ms) else None
+        return new, pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy()[emit],
                 "gap_start_ms": prev_ms[emit].astype(np.int64),
                 "gap_end_ms": ms[emit],
-                "gap_s": np.where(
-                    ooo[emit], np.nan, gap_ms[emit] / 1000.0
-                ),
+                "gap_s": np.where(ooo[emit], np.nan, gap_ms[emit] / 1000.0),
                 "out_of_order": ooo[emit],
             }
         )
 
-    base = stream.select(
-        key_col, to_epoch_millis(ts_col).alias("ts_ms")
-    )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    base = stream.select(key_col, to_epoch_millis(ts_col).alias("ts_ms"))
+    return _keyed_fold(
+        base, key_col, "ts_ms",
+        "gap_start_ms bigint, gap_end_ms bigint, gap_s double, "
+        "out_of_order boolean",
+        "last_ms bigint",
+        step,
     )
 
 
@@ -415,10 +399,9 @@ def streaming_funnel(
     the advance is computed with at most k VECTORIZED passes over the
     batch's rows (first qualifying row per remaining step — the same
     "first B at/after A" contract as batch, ``>=`` on ties within the
-    sorted batch order); no per-row Python. Samples are assumed in-order
-    per key across micro-batches (the ``streaming_counter_rate``
-    contract). ``within`` bounds completion to ``within x unit`` after
-    step 1, exactly as in batch.
+    sorted batch order); no per-row Python. Ordering follows the module's
+    shared contract. ``within`` bounds completion to ``within x unit``
+    after step 1, exactly as in batch.
 
     Output (append): one row per key per micro-batch IN WHICH THE KEY
     ADVANCED at least one stage — (key, steps_completed, step_ts_ms
@@ -426,11 +409,6 @@ def streaming_funnel(
     emitted row per key always equals the batch ``funnel`` verdict on
     the same closed input (pinned by tests).
     """
-    from tablecloth_time_spark.functions.units import (
-        milliseconds_in,
-        normalize_unit,
-    )
-
     if len(steps) < 2:
         raise ValueError(f"funnel needs >= 2 steps, got {steps!r}")
     if len(set(steps)) != len(steps):
@@ -442,40 +420,15 @@ def streaming_funnel(
         else None
     )
 
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("steps_completed", IntegerType()),
-            StructField("step_ts_ms", ArrayType(LongType())),
-            StructField("converted", BooleanType()),
-        ]
-    )
-    # stage + k completed-step times (null past the stage)
-    state_schema = StructType(
-        [StructField("stage", IntegerType())]
-        + [StructField(f"t{i}", LongType()) for i in range(1, k + 1)]
-    )
-
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
         st = pdf["step"].to_numpy()
-
-        if state.exists:
-            got = state.get
-            stage = int(got[0])
-            times = [got[i] for i in range(1, k + 1)]
-        else:
-            stage, times = 0, [None] * k
+        stage, *times = state or (0, *[None] * k)
+        stage = int(stage)
 
         advanced = False
         while stage < k:
-            target = steps[stage]
-            mask = st == target
+            mask = st == steps[stage]
             if stage > 0:
                 mask &= ms >= times[stage - 1]
                 if deadline_ms is not None:
@@ -488,17 +441,12 @@ def streaming_funnel(
             advanced = True
 
         if not advanced:
-            return
-        state.update(
-            (stage, *[None if t is None else int(t) for t in times])
-        )
-        yield pd.DataFrame(
+            return None, None
+        times = [None if t is None else int(t) for t in times]
+        return (stage, *times), pd.DataFrame(
             {
-                key_col: [pdf[key_col].iloc[0]],
                 "steps_completed": np.array([stage], dtype="int32"),
-                "step_ts_ms": [
-                    [None if t is None else int(t) for t in times]
-                ],
+                "step_ts_ms": [times],
                 "converted": [stage == k],
             }
         )
@@ -508,12 +456,12 @@ def streaming_funnel(
         to_epoch_millis(ts_col).alias("ts_ms"),
         F.col(step_col).alias("step"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    # state: stage + k completed-step times (null past the stage)
+    return _keyed_fold(
+        base, key_col, "ts_ms",
+        "steps_completed int, step_ts_ms array<bigint>, converted boolean",
+        ", ".join(["stage int"] + [f"t{i} bigint" for i in range(1, k + 1)]),
+        step,
     )
 
 
@@ -549,39 +497,13 @@ def streaming_ewma(
     batch docstring's fuzzy band, and for any gap >= 2560 halflives both
     underflow to exactly null.
 
-    Output (append): key, ts_ms, value, ewma. In-order contract across
-    micro-batches (the ``streaming_counter_rate`` contract).
+    Output (append): key, ts_ms, value, ewma. Ordering follows the
+    module's shared contract.
     """
-    from tablecloth_time_spark.functions.units import (
-        milliseconds_in,
-        normalize_unit,
-    )
-
     halflife_ms = int(halflife * milliseconds_in(normalize_unit(unit)))
     seg_ms = 512 * halflife_ms
 
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("value", DoubleType()),
-            StructField("ewma", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_seg", LongType()),
-            StructField("a_num", DoubleType()),
-            StructField("a_den", DoubleType()),
-        ]
-    )
-
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("ts_ms", kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype=np.int64)
         v = pdf["value"].to_numpy(dtype=np.float64)
 
@@ -607,40 +529,28 @@ def streaming_ewma(
 
         # carry chain across the batch's segments (loop over SEGMENTS)
         segs = seg[starts]
-        if state.exists:
-            last_seg, a_num, a_den = state.get
-        else:
-            last_seg, a_num, a_den = None, 0.0, 0.0
+        last_seg, a_num, a_den = state or (None, 0.0, 0.0)
         carry_x = np.empty(len(starts))
         carry_d = np.empty(len(starts))
         cx, cd, prev_seg = a_num, a_den, last_seg
-        for k, s in enumerate(segs):
+        for i, s in enumerate(segs):
             if prev_seg is not None:
                 f = 2.0 ** (-512.0 * float(s - prev_seg))
                 cx, cd = cx * f, cd * f
             else:
                 cx, cd = 0.0, 0.0
-            carry_x[k], carry_d[k] = cx, cd
+            carry_x[i], carry_d[i] = cx, cd
             # close this segment into the carry for the next one
-            end = starts[k + 1] - 1 if k + 1 < len(starts) else len(ms) - 1
+            end = bounds[i + 1] - 1
             cx, cd = cx + px[end], cd + pd_[end]
             prev_seg = s
-        row_cx = np.repeat(carry_x, np.diff(np.append(starts, len(ms))))
-        row_cd = np.repeat(carry_d, np.diff(np.append(starts, len(ms))))
-
-        num = row_cx + px
-        den = row_cd + pd_
+        num = np.repeat(carry_x, np.diff(bounds)) + px
+        den = np.repeat(carry_d, np.diff(bounds)) + pd_
         with np.errstate(divide="ignore", invalid="ignore"):
             ewma = np.where(den > 0, num / den, np.nan)
 
-        state.update((int(segs[-1]), float(cx), float(cd)))
-        yield pd.DataFrame(
-            {
-                key_col: pdf[key_col].to_numpy(),
-                "ts_ms": ms,
-                "value": v,
-                "ewma": ewma,
-            }
+        return (int(segs[-1]), float(cx), float(cd)), pd.DataFrame(
+            {"ts_ms": ms, "value": v, "ewma": ewma}
         )
 
     base = stream.select(
@@ -648,12 +558,11 @@ def streaming_ewma(
         to_epoch_millis(ts_col).alias("ts_ms"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        base, key_col, "ts_ms",
+        "ts_ms bigint, value double, ewma double",
+        "last_seg bigint, a_num double, a_den double",
+        step,
     )
 
 
@@ -670,7 +579,7 @@ def streaming_budget_prefix(
     per turn the moment it lands instead of re-scanning the
     conversation per batch.
 
-    State per key is two int64s: (highest position processed, running
+    State per key is two numbers: (highest position processed, running
     cumulative cost over ALL processed rows). Because costs are
     non-negative (the batch operator's documented contract), the
     running cost is monotone — once a turn overflows the budget every
@@ -678,13 +587,11 @@ def streaming_budget_prefix(
     false; no "closed" flag is needed and over-budget turns are
     DROPPED exactly as the batch filter drops them.
 
-    Ordering contract (the ``streaming_counter_rate`` family's): within
-    a micro-batch rows sort by ``pos_col``; across micro-batches a
-    key's turns are assumed in order. A row at or below the key's
-    carried position (late replay / duplicate) is emitted FLAGGED
-    (out_of_order=true, null cum_cost) and does not touch the running
-    cost — never silently mis-accumulated. Null costs count 0 (batch
-    contract).
+    Ordering follows the module's shared contract, with ``pos_col`` as
+    the sort column: a row at or below the key's carried position (late
+    replay / duplicate) is emitted FLAGGED (out_of_order=true, null
+    cum_cost) and does not touch the running cost. Null costs count 0
+    (batch contract).
 
     Output (append): key, pos, cum_cost (double), out_of_order. On a
     closed in-order input, rows with out_of_order=false match the batch
@@ -698,60 +605,37 @@ def streaming_budget_prefix(
         raise ValueError(
             f"streaming_budget_prefix: budget must be > 0, got {budget}"
         )
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("pos", LongType()),
-            StructField("cum_cost", DoubleType()),
-            StructField("out_of_order", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("last_pos", LongType()), StructField("cum", DoubleType())]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values("pos", kind="stable")
+    def step(pdf, state):
         pos = pdf["pos"].to_numpy(dtype=np.int64)
         cost = pdf["cost"].to_numpy(dtype=np.float64)
         cost = np.where(np.isnan(cost), 0.0, cost)  # null costs count 0
 
-        last_pos, cum = state.get if state.exists else (None, 0.0)
+        last_pos, cum = state or (None, 0.0)
         # late = at/below the carried position, or a duplicate of an
         # earlier in-batch position (sorted, so a dup == its neighbor)
         ooo = np.zeros(len(pos), dtype=bool)
         if last_pos is not None:
             ooo |= pos <= last_pos
-        dup = np.zeros(len(pos), dtype=bool)
-        dup[1:] = pos[1:] == pos[:-1]
-        ooo |= dup
+        ooo[1:] |= pos[1:] == pos[:-1]
         valid = ~ooo
 
         run = cum + np.cumsum(np.where(valid, cost, 0))
         keep = valid & (run <= budget)
 
+        new = None
         if valid.any():
             new_last = int(pos[valid].max())
-            state.update(
-                (
-                    new_last if last_pos is None else max(last_pos, new_last),
-                    float(cum + cost[valid].sum()),
-                )
+            new = (
+                new_last if last_pos is None else max(last_pos, new_last),
+                float(cum + cost[valid].sum()),
             )
         emit = keep | ooo
-        if not emit.any():
-            return
-        cum_out = pd.Series(run[emit], dtype="float64")
-        cum_out[pd.Series(ooo[emit]).to_numpy()] = np.nan  # late: unknown
-        yield pd.DataFrame(
+        return new, pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy()[emit],
                 "pos": pos[emit],
-                "cum_cost": cum_out,
+                # late rows: running cost unknown
+                "cum_cost": np.where(ooo[emit], np.nan, run[emit]),
                 "out_of_order": ooo[emit],
             }
         )
@@ -761,12 +645,11 @@ def streaming_budget_prefix(
         F.col(pos_col).cast("long").alias("pos"),
         F.col(cost_col).cast("double").alias("cost"),
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        base, key_col, "pos",
+        "pos bigint, cum_cost double, out_of_order boolean",
+        "last_pos bigint, cum double",
+        step,
     )
 
 
@@ -782,10 +665,10 @@ def streaming_type_entropy(
 
     State per key is the per-category count map (two parallel arrays in
     the state store) — size bounded by the key's CATEGORY VOCABULARY,
-    not by row count or time, so no watermark is required (the
-    ``streaming_counter_rate`` state-cardinality contract). Each
-    micro-batch folds its pandas ``value_counts`` into the map in one
-    vectorized pass; no per-row Python.
+    not by row count or time (the module's shared state contract; the
+    fold is order-free, so rows are not sorted). Each micro-batch folds
+    its pandas ``value_counts`` into the map in one vectorized pass; no
+    per-row Python.
 
     Output (append): one row per key per micro-batch in which the key
     received rows — (key, n_rows, n_distinct, entropy_bits,
@@ -797,39 +680,12 @@ def streaming_type_entropy(
     carried as strings; NULL categories count as a category of their
     own, exactly as in batch.
     """
-    from pyspark.sql.types import StringType
 
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("n_rows", LongType()),
-            StructField("n_distinct", IntegerType()),
-            StructField("entropy_bits", DoubleType()),
-            StructField("norm_entropy", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cats", ArrayType(StringType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        vc = pdf["cat"].value_counts(dropna=False)
-        if state.exists:
-            cats, counts = state.get
-            d = dict(zip(cats, counts))
-        else:
-            d = {}
-        for cat, c in vc.items():
+    def step(pdf, state):
+        d = dict(zip(*state)) if state else {}
+        for cat, c in pdf["cat"].value_counts(dropna=False).items():
             ck = None if pd.isna(cat) else str(cat)
             d[ck] = d.get(ck, 0) + int(c)
-        state.update((list(d.keys()), list(d.values())))
 
         # deterministic float order: NULL category first, then sorted
         items = sorted(d.items(), key=lambda kv: (kv[0] is not None, kv[0] or ""))
@@ -838,9 +694,8 @@ def streaming_type_entropy(
         k = len(c_arr)
         ent = float(np.log2(n) - (c_arr * np.log2(c_arr)).sum() / n)
         norm = float(ent / np.log2(k)) if k > 1 else 0.0
-        yield pd.DataFrame(
+        return (list(d.keys()), list(d.values())), pd.DataFrame(
             {
-                key_col: [pdf[key_col].iloc[0]],
                 "n_rows": np.array([int(n)], dtype="int64"),
                 "n_distinct": np.array([k], dtype="int32"),
                 "entropy_bits": [ent],
@@ -848,15 +703,13 @@ def streaming_type_entropy(
             }
         )
 
-    base = stream.select(
-        key_col, F.col(cat_col).cast("string").alias("cat")
-    )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    base = stream.select(key_col, F.col(cat_col).cast("string").alias("cat"))
+    return _keyed_fold(
+        base, key_col, None,
+        "n_rows bigint, n_distinct int, entropy_bits double, "
+        "norm_entropy double",
+        "cats array<string>, counts array<bigint>",
+        step,
     )
 
 
@@ -869,8 +722,8 @@ def streaming_sortedness(
     """Streaming ingest-order monitor — the stateful twin of the batch
     ``operators.validate.sortedness_report``: per key, flag every row
     whose event time is NULL or runs backward against the immediately
-    preceding row (in ``order_col`` arrival order), carrying the
-    predecessor across micro-batches.
+    preceding row (in ``order_col`` arrival order, the sort column),
+    carrying the predecessor across micro-batches.
 
     Output (append, one row per input row): key, <order_col>, ts_ms,
     is_null, is_violation. Aggregating the flags per key reproduces the
@@ -882,71 +735,41 @@ def streaming_sortedness(
     Violation semantics match the batch operator bit-for-bit: the
     comparison predecessor is the previous ROW's timestamp (which may
     itself be NULL — then no violation can fire at this row), nulls have
-    no order, monotonicity is non-strict. State per key is 10 bytes
-    (nullable prev-ms + has-prev), so 10^9 live keys fit comfortably in
-    executor state stores.
+    no order, monotonicity is non-strict. This twin flags backward time
+    rather than carrying the latest one, so its state is always the last
+    row's: 10 bytes per key (nullable prev-ms + has-prev), so 10^9 live
+    keys fit comfortably in executor state stores.
     """
-    key_field = stream.schema[key_col]
-    order_field = stream.schema[order_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField(order_col, order_field.dataType),
-            StructField("ts_ms", LongType()),
-            StructField("is_null", BooleanType()),
-            StructField("is_violation", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("prev_ms", LongType()),
-            StructField("has_prev", BooleanType()),
-        ]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values(order_col, kind="stable")
+    def step(pdf, state):
         ms = pdf["ts_ms"].to_numpy(dtype="float64")  # NULL -> NaN
         prev = np.roll(ms, 1)
-        if state.exists:
-            prev_ms, has_prev = state.get
-            prev[0] = float(prev_ms) if (has_prev and prev_ms is not None) else np.nan
-        else:
-            prev[0] = np.nan
+        prev_ms, has_prev = state or (None, False)
+        prev[0] = float(prev_ms) if (has_prev and prev_ms is not None) else np.nan
         is_null = np.isnan(ms)
         with np.errstate(invalid="ignore"):
             viol = ~is_null & ~np.isnan(prev) & (ms < prev)
         last = ms[-1]
-        state.update(
-            (None if np.isnan(last) else int(last), True)
-        )
-        out_ms = pd.array(
-            [None if np.isnan(x) else int(x) for x in ms], dtype="Int64"
-        )
-        yield pd.DataFrame(
+        return (None if np.isnan(last) else int(last), True), pd.DataFrame(
             {
-                key_col: pdf[key_col].to_numpy(),
                 order_col: pdf[order_col].to_numpy(),
-                "ts_ms": out_ms,
+                "ts_ms": pd.array(
+                    [None if np.isnan(x) else int(x) for x in ms], dtype="Int64"
+                ),
                 "is_null": is_null,
                 "is_violation": viol,
             }
         )
 
     base = stream.select(
-        key_col,
-        order_col,
-        to_epoch_millis(ts_col).alias("ts_ms"),
+        key_col, order_col, to_epoch_millis(ts_col).alias("ts_ms")
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        base, key_col, order_col,
+        f"{_ddl_field(base, order_col)}, ts_ms bigint, is_null boolean, "
+        "is_violation boolean",
+        "prev_ms bigint, has_prev boolean",
+        step,
     )
 
 
@@ -961,56 +784,22 @@ def streaming_alternation_runs(
     row per key per micro-batch carrying the RUNNING profile (n_turns,
     n_runs, max/mean run length, alternation ratio, longest-run role);
     the last emission per key equals the batch operator on the full
-    input when micro-batches respect arrival order (pinned by
-    tests/test_streaming_sortedness.py).
+    input when micro-batches respect arrival order (``order_col``, the
+    sort column; pinned by tests/test_streaming_sortedness.py).
 
     State per key is one small tuple: the previous role (null-safe — a
     NULL role is its own run value, exactly the batch semantics), the
     open run's length and role, the counters, and the best run so far.
     Earliest-run tie-breaking falls out of the scan order: a later run
-    only replaces the champion when STRICTLY longer. applyInPandasWithState
-    keeps the whole profile at ~60 bytes/key, so 10^9 live conversations
-    fit executor state stores.
+    only replaces the champion when STRICTLY longer. The whole profile is
+    ~60 bytes/key, so 10^9 live conversations fit executor state stores.
     """
-    key_field = stream.schema[key_col]
-    out_schema = StructType(
-        [
-            StructField(key_col, key_field.dataType),
-            StructField("n_turns", LongType()),
-            StructField("n_runs", LongType()),
-            StructField("max_run_len", LongType()),
-            StructField("mean_run_len", DoubleType()),
-            StructField("alternation_ratio", DoubleType()),
-            StructField("longest_run_role", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("has_prev", BooleanType()),
-            StructField("prev_role", StringType()),
-            StructField("n_turns", LongType()),
-            StructField("n_runs", LongType()),
-            StructField("cur_len", LongType()),
-            StructField("best_len", LongType()),
-            StructField("best_role", StringType()),
-        ]
-    )
 
-    def kernel(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if not len(pdf):
-            return
-        pdf = pdf.sort_values(order_col, kind="stable")
-        roles = pdf["role"].to_numpy(dtype=object)
-        if state.exists:
-            has_prev, prev_role, n_turns, n_runs, cur_len, best_len, best_role = (
-                state.get
-            )
-        else:
-            has_prev, prev_role = False, None
-            n_turns = n_runs = cur_len = best_len = 0
-            best_role = None
-        for r in roles:
+    def step(pdf, state):
+        has_prev, prev_role, n_turns, n_runs, cur_len, best_len, best_role = (
+            state or (False, None, 0, 0, 0, 0, None)
+        )
+        for r in pdf["role"].to_numpy(dtype=object):
             r = None if pd.isna(r) else r
             n_turns += 1
             if has_prev and r == prev_role:
@@ -1021,13 +810,10 @@ def streaming_alternation_runs(
             if cur_len > best_len:
                 best_len, best_role = cur_len, r
             has_prev, prev_role = True, r
-        state.update(
-            (has_prev, prev_role, int(n_turns), int(n_runs), int(cur_len),
-             int(best_len), best_role)
-        )
-        yield pd.DataFrame(
+        new = (has_prev, prev_role, int(n_turns), int(n_runs), int(cur_len),
+               int(best_len), best_role)
+        return new, pd.DataFrame(
             {
-                key_col: [pdf[key_col].iloc[0]],
                 "n_turns": np.array([n_turns], dtype="int64"),
                 "n_runs": np.array([n_runs], dtype="int64"),
                 "max_run_len": np.array([best_len], dtype="int64"),
@@ -1042,10 +828,12 @@ def streaming_alternation_runs(
     base = stream.select(
         key_col, order_col, F.col(role_col).cast("string").alias("role")
     )
-    return base.groupBy(key_col).applyInPandasWithState(
-        kernel,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        base, key_col, order_col,
+        "n_turns bigint, n_runs bigint, max_run_len bigint, "
+        "mean_run_len double, alternation_ratio double, "
+        "longest_run_role string",
+        "has_prev boolean, prev_role string, n_turns bigint, n_runs bigint, "
+        "cur_len bigint, best_len bigint, best_role string",
+        step,
     )

@@ -76,6 +76,38 @@ def await_stream(q) -> None:
         q.stop()
 
 
+def run_microbatches(spark, tmp_path, frames, op, schema=None):
+    """Drive the streaming operator ``op`` (stream -> stream) over
+    ``frames``, one micro-batch per pandas frame, and return the sink.
+
+    Each frame is written as one parquet file under ``tmp_path/src`` and
+    the file stream reads them in order with ``maxFilesPerTrigger=1``
+    (``schema`` defaults to the first frame's). The output goes to a
+    parquet sink in append mode with an ``availableNow`` trigger."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, frame in enumerate(frames):
+        spark.createDataFrame(frame).coalesce(1).write.parquet(str(src / f"f{i}"))
+    if schema is None:
+        schema = spark.createDataFrame(frames[0]).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src / "f*"))
+    )
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    q = (
+        op(stream).writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
+    return spark.read.parquet(sink)
+
+
 def executed_plan(df) -> str:
     """The physical plan Spark would run for ``df``, as its plan string."""
     return df._jdf.queryExecution().executedPlan().toString()

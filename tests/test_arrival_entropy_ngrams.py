@@ -22,7 +22,7 @@ from tablecloth_time_spark.sources.transcripts import (
     generate_transcripts_pandas,
 )
 
-from tests.conftest import await_stream
+from tests.conftest import run_microbatches
 
 
 @pytest.fixture(scope="module")
@@ -220,32 +220,13 @@ def test_streaming_type_entropy_matches_batch(spark, tmp_path):
             "seq": np.arange(n),
         }
     )
-    src = tmp_path / "src"
-    src.mkdir()
     full = spark.createDataFrame(rows)
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
-        spark.createDataFrame(rows.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_type_entropy(stream, "k", "cat")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
-    got_all = spark.read.parquet(sink).toPandas()
+    got_all = run_microbatches(
+        spark, tmp_path,
+        [rows.iloc[part] for part in np.array_split(np.arange(n), 3)],
+        lambda s: streaming_type_entropy(s, "k", "cat"),
+        schema=full.schema,
+    ).toPandas()
     # per key: the row with the largest n_rows is the final state
     got = (
         got_all.sort_values(["k", "n_rows"], kind="stable")

@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import session_conf
 from tablecloth_time_spark.operators.rollup import rollup
 from tablecloth_time_spark.plans.continuous import (
     CompressSpec,
@@ -286,6 +287,34 @@ def test_compression_stage_in_refresh(spark, tmp_path, batches):
     )
     a = restored.toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
     e = expected.toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        a[sorted(a.columns)], e[sorted(e.columns)], check_dtype=False
+    )
+
+
+def test_incremental_refresh_keeps_block_points_in_non_utc_zone(spark, tmp_path):
+    """Tier rows and their blocks share one partition-date rule (the UTC
+    date): under a non-UTC session zone, a second refresh that dirties a
+    few tier days rewrites exactly those days' blocks, so the compressed
+    tier still decodes every point the tier holds."""
+    from tablecloth_time_spark.operators.compress import decompress_blocks
+
+    pdf = generate_transcripts_pandas(n_conv=40, seed=42)
+    pdf = pdf.sort_values("ts", kind="stable").reset_index(drop=True)
+    cut = int(len(pdf) * 0.97)
+    with session_conf(spark, {"spark.sql.session.timeZone": "America/Los_Angeles"}):
+        src, ca = _make_ca(
+            spark, str(tmp_path / "src"), str(tmp_path / "agg"),
+            compress=CompressSpec(tier="minute", value_cols={"n_turns": "int"}),
+        )
+        for part in (pdf.iloc[:cut], pdf.iloc[cut:]):
+            src.append(_with_len(spark.createDataFrame(part, schema=TRANSCRIPTS_SCHEMA)))
+            ca.refresh()
+        restored = decompress_blocks(ca.read_blocks("minute"), {"n_turns": "int"})
+        tier = ca.read_tier("minute").selectExpr("conv_id", "bucket as ts", "n_turns")
+        a = restored.toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
+        e = tier.toPandas().sort_values(["conv_id", "ts"]).reset_index(drop=True)
+    assert len(a) == len(e) > 0
     pd.testing.assert_frame_equal(
         a[sorted(a.columns)], e[sorted(e.columns)], check_dtype=False
     )

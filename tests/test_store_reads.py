@@ -134,9 +134,9 @@ def test_read_after_refresh_sees_new_partitions(spark, tmp_path):
 
 
 def test_block_slice_across_utc_midnight_in_any_session_zone(spark, tmp_path):
-    """A store written and read under a non-UTC session zone files each
-    day block under its LOCAL date: the p_date prune must still keep
-    every block the window needs."""
+    """A store written and read under a non-UTC session zone: the
+    p_date prune must still keep every block the window needs, on both
+    sides of a UTC midnight."""
     lo, hi = T0 + dt.timedelta(days=2, hours=19), T0 + dt.timedelta(days=3, hours=5)
     for zone in ("America/Los_Angeles", "Asia/Kolkata"):
         with session_conf(spark, {"spark.sql.session.timeZone": zone}):

@@ -17,7 +17,7 @@ from tablecloth_time_spark.streaming.rollup import (
     _interval_string,
 )
 
-from tests.conftest import await_stream
+from tests.conftest import await_stream, run_microbatches
 
 AGGS = {
     "n_turns": ("count", "turn_idx"),
@@ -205,34 +205,15 @@ def test_streaming_counter_rate_matches_batch(spark, tmp_path):
             "v": np.round(rng.uniform(0, 500, n), 3),
         }
     )
-    src = tmp_path / "src"
-    src.mkdir()
     full = spark.createDataFrame(rows)
     # three files split by GLOBAL time order -> per-key in-order batches
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
-        spark.createDataFrame(rows.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_counter_rate(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path,
+            [rows.iloc[part] for part in np.array_split(np.arange(n), 3)],
+            lambda s: streaming_counter_rate(s, "k", "ts", "v"),
+            schema=full.schema,
+        )
         .toPandas()
         .sort_values(["k", "ts_ms"], kind="stable")
         .reset_index(drop=True)
@@ -267,26 +248,11 @@ def test_streaming_counter_rate_flags_out_of_order(spark, tmp_path):
     f1 = pd.DataFrame({"k": [1, 1], "ts": [t0, t0 + pd.Timedelta("10s")],
                        "v": [10.0, 20.0]})
     f2 = pd.DataFrame({"k": [1], "ts": [t0 + pd.Timedelta("5s")], "v": [15.0]})
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = spark.createDataFrame(f1).schema
-    spark.createDataFrame(f1).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(f2).coalesce(1).write.parquet(str(src / "f1"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
+    sink = run_microbatches(
+        spark, tmp_path, [f1, f2],
+        lambda s: streaming_counter_rate(s, "k", "ts", "v"),
     )
-    out = streaming_counter_rate(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    await_stream(q)
-    got = spark.read.parquet(sink).toPandas().sort_values("ts_ms")
+    got = sink.toPandas().sort_values("ts_ms")
     ooo = got[got["out_of_order"]]
     assert len(ooo) == 1 and ooo.iloc[0]["value"] == 15.0
     assert pd.isna(ooo.iloc[0]["delta"])
@@ -303,26 +269,11 @@ def test_streaming_counter_rate_state_not_regressed_by_late_batch(
     f0 = pd.DataFrame({"k": [1], "ts": [t0 + pd.Timedelta("10s")], "v": [20.0]})
     f1 = pd.DataFrame({"k": [1], "ts": [t0 + pd.Timedelta("5s")], "v": [15.0]})
     f2 = pd.DataFrame({"k": [1], "ts": [t0 + pd.Timedelta("20s")], "v": [25.0]})
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = spark.createDataFrame(f0).schema
-    for i, f in enumerate((f0, f1, f2)):
-        spark.createDataFrame(f).coalesce(1).write.parquet(str(src / f"f{i}"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
+    sink = run_microbatches(
+        spark, tmp_path, [f0, f1, f2],
+        lambda s: streaming_counter_rate(s, "k", "ts", "v"),
     )
-    out = streaming_counter_rate(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    await_stream(q)
-    got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
+    got = {r["value"]: r for r in sink.collect()}
     # 25.0 at t=20s: delta vs the TRUE predecessor (20.0 at t=10s), not
     # vs the late sample (15.0 at t=5s)
     assert got[25.0]["delta"] == 5.0
@@ -345,25 +296,11 @@ def test_streaming_counter_rate_mixed_late_batch(spark, tmp_path):
             "v": [15.0, 25.0],
         }
     )
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = spark.createDataFrame(f0).schema
-    for i, f in enumerate((f0, f1)):
-        spark.createDataFrame(f).coalesce(1).write.parquet(str(src / f"f{i}"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
+    sink = run_microbatches(
+        spark, tmp_path, [f0, f1],
+        lambda s: streaming_counter_rate(s, "k", "ts", "v"),
     )
-    out = streaming_counter_rate(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    await_stream(q)
-    got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
+    got = {r["value"]: r for r in sink.collect()}
     assert got[15.0]["out_of_order"] and got[15.0]["delta"] is None
     assert not got[25.0]["out_of_order"]
     assert got[25.0]["delta"] == 5.0 and got[25.0]["rate_per_s"] == 0.5
@@ -383,25 +320,11 @@ def test_streaming_counter_rate_wholly_late_multirow_batch(spark, tmp_path):
             "v": [11.0, 15.0],
         }
     )
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = spark.createDataFrame(f0).schema
-    for i, f in enumerate((f0, f1)):
-        spark.createDataFrame(f).coalesce(1).write.parquet(str(src / f"f{i}"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
+    sink = run_microbatches(
+        spark, tmp_path, [f0, f1],
+        lambda s: streaming_counter_rate(s, "k", "ts", "v"),
     )
-    out = streaming_counter_rate(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    await_stream(q)
-    got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
+    got = {r["value"]: r for r in sink.collect()}
     assert got[11.0]["out_of_order"] and got[15.0]["out_of_order"]
     assert got[11.0]["delta"] is None and got[15.0]["delta"] is None
 
@@ -419,25 +342,11 @@ def test_streaming_counter_rate_exact_timestamp_replay_keeps_state(
     # replay at the same 10s timestamp, DIFFERENT value
     f1 = pd.DataFrame({"k": [1], "ts": [t0 + pd.Timedelta("10s")], "v": [99.0]})
     f2 = pd.DataFrame({"k": [1], "ts": [t0 + pd.Timedelta("20s")], "v": [25.0]})
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = spark.createDataFrame(f0).schema
-    for i, f in enumerate((f0, f1, f2)):
-        spark.createDataFrame(f).coalesce(1).write.parquet(str(src / f"f{i}"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
+    sink = run_microbatches(
+        spark, tmp_path, [f0, f1, f2],
+        lambda s: streaming_counter_rate(s, "k", "ts", "v"),
     )
-    out = streaming_counter_rate(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    await_stream(q)
-    got = {r["value"]: r for r in spark.read.parquet(sink).collect()}
+    got = {r["value"]: r for r in sink.collect()}
     # 25.0 at t=20s differences against the FIRST delivery (20.0), not
     # the replayed 99.0 — delta 5.0 over 10s
     assert got[25.0]["delta"] == 5.0
@@ -714,32 +623,14 @@ def test_streaming_cusum_matches_batch(spark, tmp_path):
     )
     rows = rows.merge(stats, on="k")
 
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
-        spark.createDataFrame(
-            rows.sort_values("ts", kind="stable").iloc[part]
-        ).coalesce(1).write.parquet(str(src / f"f{i}"))
-
-    stream = (
-        spark.readStream.schema(spark.createDataFrame(rows).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_cusum(stream, "k", "ts", "v", k=0.5, h=4.0)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
+    ordered = rows.sort_values("ts", kind="stable")
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path,
+            [ordered.iloc[part] for part in np.array_split(np.arange(n), 3)],
+            lambda s: streaming_cusum(s, "k", "ts", "v", k=0.5, h=4.0),
+            schema=spark.createDataFrame(rows).schema,
+        )
         .toPandas()
         .sort_values(["k", "ts_ms"], kind="stable")
         .reset_index(drop=True)
@@ -781,27 +672,9 @@ def test_streaming_cusum_null_sd_yields_null_scores(spark, tmp_path):
             "sd": [0.0] * 3,
         }
     )
-    src = tmp_path / "src"
-    src.mkdir()
-    full = spark.createDataFrame(rows)
-    full.coalesce(1).write.parquet(str(src / "f0"))
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_cusum(stream, "k", "ts", "v")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-    got = spark.read.parquet(sink).toPandas()
+    got = run_microbatches(
+        spark, tmp_path, [rows], lambda s: streaming_cusum(s, "k", "ts", "v")
+    ).toPandas()
     assert len(got) == 3
     assert got["cusum_pos"].isna().all()
     assert got["cusum_neg"].isna().all()
@@ -827,32 +700,13 @@ def test_streaming_detect_gaps_matches_batch(spark, tmp_path):
         }
     )
     full = spark.createDataFrame(rows)
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
-        spark.createDataFrame(rows.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_detect_gaps(stream, "k", "ts", 2, "hour")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path,
+            [rows.iloc[part] for part in np.array_split(np.arange(n), 3)],
+            lambda s: streaming_detect_gaps(s, "k", "ts", 2, "hour"),
+            schema=full.schema,
+        )
         .toPandas()
         .sort_values(["k", "gap_end_ms"], kind="stable")
         .reset_index(drop=True)
@@ -897,31 +751,11 @@ def test_streaming_detect_gaps_flags_late_and_first_sample(spark, tmp_path):
             }
         ),
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = None
-    for i, w in enumerate(waves):
-        sdf = spark.createDataFrame(w)
-        schema = sdf.schema
-        sdf.coalesce(1).write.parquet(str(src / f"f{i}"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_detect_gaps(stream, "k", "ts", 1, "hour")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path, waves,
+            lambda s: streaming_detect_gaps(s, "k", "ts", 1, "hour"),
+        )
         .toPandas()
         .sort_values("gap_end_ms", kind="stable")
         .reset_index(drop=True)
@@ -957,30 +791,12 @@ def test_streaming_cusum_mixed_invalid_sd_rows(spark, tmp_path):
         mk([0, 10, 20], [12.0, 14.0, 11.0], [2.0, 0.0, 2.0]),
         mk([30, 40], [13.0, 15.0], [float("nan"), 2.0]),
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, w in enumerate(waves):
-        sdf = spark.createDataFrame(w)
-        schema = sdf.schema
-        sdf.coalesce(1).write.parquet(str(src / f"f{i}"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_cusum(stream, "k", "ts", "v", k=0.5, h=2.0)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path, waves,
+            lambda s: streaming_cusum(s, "k", "ts", "v", k=0.5, h=2.0),
+            schema=spark.createDataFrame(waves[-1]).schema,
+        )
         .toPandas()
         .sort_values("ts_ms", kind="stable")
         .reset_index(drop=True)
@@ -1029,32 +845,14 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
     )
     steps = ["view", "click", "purchase"]
     full = spark.createDataFrame(rows)
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
-        spark.createDataFrame(rows.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_funnel(
-        stream, "u", "ts", "step", steps, within=120, unit="hour"
-    )
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
-    got = spark.read.parquet(sink).toPandas()
+    got = run_microbatches(
+        spark, tmp_path,
+        [rows.iloc[part] for part in np.array_split(np.arange(n), 3)],
+        lambda s: streaming_funnel(
+            s, "u", "ts", "step", steps, within=120, unit="hour"
+        ),
+        schema=full.schema,
+    ).toPandas()
     # progress is monotone: take each key's furthest emission
     last = (
         got.sort_values("steps_completed", kind="stable")
@@ -1111,31 +909,13 @@ def test_streaming_ewma_matches_batch(spark, tmp_path):
     rows["v"] = val
 
     full = spark.createDataFrame(rows)
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, part in enumerate(np.array_split(np.arange(n), 3)):
-        spark.createDataFrame(rows.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_ewma(stream, "k", "ts", "v", halflife=1, unit="hour")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path,
+            [rows.iloc[part] for part in np.array_split(np.arange(n), 3)],
+            lambda s: streaming_ewma(s, "k", "ts", "v", halflife=1, unit="hour"),
+            schema=full.schema,
+        )
         .toPandas()
         .sort_values(["k", "ts_ms"], kind="stable")
         .reset_index(drop=True)
@@ -1343,37 +1123,21 @@ def test_streaming_budget_prefix_matches_batch(spark, tmp_path):
     rows = pd.concat(frames, ignore_index=True)
     full = spark.createDataFrame(rows)
 
-    src = tmp_path / "src"
-    src.mkdir()
     # split by GLOBAL turn_idx order -> per-conversation in-order batches
     ordered = rows.sort_values("turn_idx", kind="stable")
-    for i, part in enumerate(np.array_split(np.arange(len(ordered)), 3)):
-        spark.createDataFrame(ordered.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
+    frames = [
+        ordered.iloc[part]
+        for part in np.array_split(np.arange(len(ordered)), 3)
+    ]
     # 4th file replays an already-processed turn of c0 (late duplicate)
-    spark.createDataFrame(rows.iloc[[0]]).coalesce(1).write.parquet(
-        str(src / "f3")
-    )
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_budget_prefix(stream, "conv_id", "turn_idx", "n_tokens", 800)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
-    got = spark.read.parquet(sink).toPandas()
+    frames.append(rows.iloc[[0]])
+    got = run_microbatches(
+        spark, tmp_path, frames,
+        lambda s: streaming_budget_prefix(
+            s, "conv_id", "turn_idx", "n_tokens", 800
+        ),
+        schema=full.schema,
+    ).toPandas()
     late = got[got["out_of_order"]]
     assert len(late) == 1 and late.iloc[0]["conv_id"] == "c0"
     assert pd.isna(late.iloc[0]["cum_cost"])
@@ -1417,28 +1181,19 @@ def test_streaming_budget_prefix_fractional_costs_match_batch(
         }
     )
     full = spark.createDataFrame(rows)
-    src = tmp_path / "src"
-    src.mkdir()
     ordered = rows.sort_values("turn_idx", kind="stable")
-    for i, part in enumerate(np.array_split(np.arange(len(ordered)), 2)):
-        spark.createDataFrame(ordered.iloc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_budget_prefix(stream, "conv_id", "turn_idx", "n_tokens", 7.5)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    await_stream(q)
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path,
+            [
+                ordered.iloc[part]
+                for part in np.array_split(np.arange(len(ordered)), 2)
+            ],
+            lambda s: streaming_budget_prefix(
+                s, "conv_id", "turn_idx", "n_tokens", 7.5
+            ),
+            schema=full.schema,
+        )
         .toPandas()
         .sort_values(["conv_id", "pos"], kind="stable")
         .reset_index(drop=True)
@@ -1470,3 +1225,71 @@ def test_streaming_budget_prefix_validation(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="budget"):
         streaming_budget_prefix(df, "conv_id", "turn_idx", "n_tokens", 0)
+
+
+def _stateful_twins():
+    from tablecloth_time_spark import streaming as S
+
+    return {
+        "counter_rate": lambda s: S.streaming_counter_rate(s, "k", "ts", "v"),
+        "cusum": lambda s: S.streaming_cusum(s, "k", "ts", "v"),
+        "detect_gaps": lambda s: S.streaming_detect_gaps(s, "k", "ts", 1),
+        "funnel": lambda s: S.streaming_funnel(
+            s, "k", "ts", "step", ["view", "click"]
+        ),
+        "ewma": lambda s: S.streaming_ewma(s, "k", "ts", "v", halflife=1),
+        "budget_prefix": lambda s: S.streaming_budget_prefix(
+            s, "k", "seq", "cost", 100
+        ),
+        "type_entropy": lambda s: S.streaming_type_entropy(s, "k", "cat"),
+        "sortedness": lambda s: S.streaming_sortedness(s, "k", "seq", "ts"),
+        "alternation_runs": lambda s: S.streaming_alternation_runs(
+            s, "k", "seq", "role"
+        ),
+    }
+
+
+@pytest.mark.parametrize("twin", sorted(_stateful_twins()))
+def test_stateful_twin_string_key_schema_and_plan(spark, tmp_path, twin):
+    """Every stateful twin runs through the one keyed-fold harness: on a
+    STRING key its output's first field is the key with the input's type,
+    and the executed plan holds exactly one stateful pandas node."""
+    from pyspark.sql.types import StringType, StructField
+
+    t0 = pd.Timestamp("2024-03-01")
+    rows = pd.DataFrame(
+        {
+            "k": ["a", "a", "b"],
+            "ts": [t0, t0 + pd.Timedelta(minutes=10), t0],
+            "v": [1.0, 3.0, 2.0],
+            "mu": [2.0] * 3,
+            "sd": [1.0] * 3,
+            "step": ["view", "click", "view"],
+            "seq": [0, 1, 0],
+            "cost": [5, 7, 9],
+            "cat": ["x", "y", "x"],
+            "role": ["user", "assistant", "user"],
+        }
+    )
+    src = tmp_path / "src"
+    frame = spark.createDataFrame(rows)
+    frame.coalesce(1).write.parquet(str(src / "f0"))
+    stream = spark.readStream.schema(frame.schema).parquet(str(src / "f*"))
+    out = _stateful_twins()[twin](stream)
+    assert out.schema.fields[0] == StructField("k", StringType(), True)
+
+    sink = str(tmp_path / "sink")
+    q = (
+        out.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
+    assert q._jsq.explainInternal(False).count("FlatMapGroupsInPandasWithState") == 1
+    got = spark.read.parquet(sink)
+    assert got.schema.fields[0] == out.schema.fields[0]
+    keys = {r["k"] for r in got.collect()}
+    assert keys and keys <= {"a", "b"}

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from tablecloth_time_spark.operators.validate import sortedness_report
 from tablecloth_time_spark.streaming.stateful import streaming_sortedness
 
-from tests.conftest import await_stream
+from tests.conftest import run_microbatches
 
 
 def _fixture(n: int = 400, seed: int = 13) -> pd.DataFrame:
@@ -35,34 +35,15 @@ def test_streaming_sortedness_matches_batch(spark, tmp_path):
     rows = _fixture()
     full = spark.createDataFrame(rows)
 
-    src = tmp_path / "src"
-    src.mkdir()
     # split by GLOBAL arrival order -> per-key in-seq micro-batches
     order = rows.sort_values(["seq"], kind="stable").index.to_numpy()
-    for i, part in enumerate(np.array_split(order, 3)):
-        spark.createDataFrame(rows.loc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_sortedness(stream, "k", "seq", "ts")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path,
+            [rows.loc[part] for part in np.array_split(order, 3)],
+            lambda s: streaming_sortedness(s, "k", "seq", "ts"),
+            schema=full.schema,
+        )
         .groupBy("k")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -99,29 +80,12 @@ def test_streaming_sortedness_null_predecessor_carry(spark, tmp_path):
     )
     rows = pd.concat([b1, b2], ignore_index=True)
     full = spark.createDataFrame(rows)
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(b1).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(b2).coalesce(1).write.parquet(str(src / "f1"))
-
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_sortedness(stream, "k", "seq", "ts")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
     got = (
-        spark.read.parquet(sink)
+        run_microbatches(
+            spark, tmp_path, [b1, b2],
+            lambda s: streaming_sortedness(s, "k", "seq", "ts"),
+            schema=full.schema,
+        )
         .toPandas()
         .sort_values("seq", kind="stable")
         .reset_index(drop=True)
@@ -159,31 +123,13 @@ def test_streaming_alternation_runs_matches_batch(spark, tmp_path):
     rows = pd.DataFrame({"k": keys, "seq": seq, "role": roles})
     full = spark.createDataFrame(rows)
 
-    src = tmp_path / "src"
-    src.mkdir()
     order = rows.sort_values(["seq"], kind="stable").index.to_numpy()
-    for i, part in enumerate(np.array_split(order, 3)):
-        spark.createDataFrame(rows.loc[part]).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "f*"))
-    )
-    out = streaming_alternation_runs(stream, "k", "seq", "role")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q)
-
-    emitted = spark.read.parquet(sink).toPandas()
+    emitted = run_microbatches(
+        spark, tmp_path,
+        [rows.loc[part] for part in np.array_split(order, 3)],
+        lambda s: streaming_alternation_runs(s, "k", "seq", "role"),
+        schema=full.schema,
+    ).toPandas()
     # last emission per key = the one with the largest running n_turns
     got = (
         emitted.sort_values(["k", "n_turns"], kind="stable")
