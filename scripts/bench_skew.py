@@ -1,28 +1,22 @@
-"""Mega-thread skew benchmark: the salted/two-phase strategies measured.
+"""Mega-thread skew benchmark: the salted two-phase rollup measured.
 
 Fixture (the FIXTURES.md skew knob taken to the driver-round spec): a
 synthetic transcripts corpus plus ONE conversation holding ~10% of all
 turns, spread over ~30 days.
 
-Two skew surfaces, measured separately because their physics differ:
+It times the groupBy rollup (mergeable aggs) at salt=0 and salt=8, at N
+and 4N cores. Spark's map-side partial aggregation already collapses the
+mega group to one partial row per map task, so explicit salting is
+expected to be a wash here (it exists for the paths where partials can't
+combine map-side, e.g. the stored-partial continuous-aggregate path). The
+bench records the honest numbers instead of a claim.
 
-1. **groupBy rollup (mergeable aggs), salt=0 vs salt=8** — Spark's
-   map-side partial aggregation already collapses the mega group to one
-   partial row per map task, so explicit salting is expected to be a
-   wash here (it exists for the paths where partials can't combine
-   map-side, e.g. the stored-partial continuous-aggregate path). The
-   bench records the honest numbers instead of a claim.
-
-2. **ordered Arrow kernel (compress_series), (key, block) split vs
-   key-only shuffle** — no combine exists for an ordered codec, so the
-   naive key-only layout puts the whole mega-thread in ONE task. At
-   low parallelism that task hides among peers; as cores grow it
-   becomes the wall-clock floor. Measured at N and 4N cores for BOTH
-   layouts: the key-only layout's N->4N scaling efficiency collapses
-   below the north rule's 0.8 while the (key, block) split keeps
-   scaling — the skew strategy is what keeps the scaling criterion
-   satisfiable, which is the 100 TB-relevant statement a single-host
-   wall-clock cannot show directly.
+The compression kernel's half of the record, its (key, block) encode
+shuffle against a key-only shuffle, was last written to BENCH/SKEW.md by
+an earlier version of this script. ``compress_series`` now has only the
+(key, block) layout, so this script no longer times it; a rerun rewrites
+BENCH/SKEW.md with the rollup half, and the kernel numbers stay in that
+file's history.
 
 Usage:
   python scripts/bench_skew.py                 # full matrix + BENCH/SKEW.md
@@ -43,15 +37,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 N_CONV = int(os.environ.get("SKEW_N_CONV", "240000"))
-# two fixtures: the driver-spec ~10% mega-thread, plus a 35% one that makes
-# the key-only straggler visible INSIDE the sandbox's faithful core pair
-# (a 10% task cannot dominate wall-clock below ~10 effective cores)
+# two fixtures: the ~10% mega-thread of the skew spec, plus a 35% one (a 10%
+# task cannot dominate wall-clock below ~10 effective cores)
 MEGA_SHARES = [
     float(x) for x in os.environ.get("SKEW_MEGA_SHARES", "0.10,0.35").split(",")
 ]
 MEGA_DAYS = int(os.environ.get("SKEW_MEGA_DAYS", "30"))
 # the faithful in-guest N->4N pair per BENCH/BREAKDOWN.md (16/32-core
-# levels hit the measured KVM host ceiling and muddy layout contrasts)
+# levels hit the measured KVM host ceiling and muddy the salt contrast)
 CORES_LO = int(os.environ.get("SKEW_CORES_LO", "2"))
 CORES_HI = int(os.environ.get("SKEW_CORES_HI", "8"))
 INPUT_DIR = os.environ.get("SKEW_INPUT_DIR", "/tmp/tts_skew_input")
@@ -129,7 +122,6 @@ def ensure_input(share: float) -> str:
 def worker(cores: int, share: float) -> None:
     from pyspark.sql import functions as F
 
-    from tablecloth_time_spark.operators.compress import compress_series
     from tablecloth_time_spark.operators.rollup import rollup
     from tablecloth_time_spark.session import get_session
 
@@ -145,7 +137,6 @@ def worker(cores: int, share: float) -> None:
         spark.read.parquet(input_path(share))
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn("text_len", F.length("text").cast("long"))
-        .withColumn("rate", (F.col("turn_idx") + 1).cast("double"))
         .repartition(cores * 4)
         .cache()
     )
@@ -168,31 +159,11 @@ def worker(cores: int, share: float) -> None:
         ).count()
         return time.perf_counter() - t0
 
-    def t_compress(skew_split: bool) -> float:
-        t0 = time.perf_counter()
-        compress_series(
-            df,
-            ts_col="ts",
-            value_cols={"text_len": "int", "rate": "float"},
-            key_col="conv_id",
-            block_unit="day",
-            order_cols=["ts", "turn_idx"],
-            skew_split=skew_split,
-        ).agg(F.sum("n_points")).collect()
-        return time.perf_counter() - t0
-
-    # warmup (codegen compile, Python worker pool)
-    t_rollup(0)
-    t_compress(True)
+    t_rollup(0)  # warmup (codegen compile)
 
     out: dict = {"cores": cores, "share": share, "n_turns": n_turns}
-    for name, fn, arg in [
-        ("rollup_salt0", t_rollup, 0),
-        ("rollup_salt8", t_rollup, 8),
-        ("compress_split", t_compress, True),
-        ("compress_keyonly", t_compress, False),
-    ]:
-        out[name] = round(min(fn(arg) for _ in range(REPS)), 3)
+    for name, salt in [("rollup_salt0", 0), ("rollup_salt8", 8)]:
+        out[name] = round(min(t_rollup(salt) for _ in range(REPS)), 3)
     print(json.dumps(out))
     spark.stop()
 
@@ -232,7 +203,7 @@ def main() -> None:
     def eff(lo: dict, hi: dict, key: str) -> float:
         return round((lo[key] / hi[key]) / ratio, 3)
 
-    keys = ["rollup_salt0", "rollup_salt8", "compress_split", "compress_keyonly"]
+    keys = ["rollup_salt0", "rollup_salt8"]
     summary = {
         "metric": "skew_bench",
         "fixtures": {
@@ -248,8 +219,6 @@ def main() -> None:
     label = {
         "rollup_salt0": "day rollup, salt=0",
         "rollup_salt8": "day rollup, salt=8 (explicit two-phase)",
-        "compress_split": "compress kernel, (key, block) split",
-        "compress_keyonly": "compress kernel, key-only shuffle",
     }
     tables = []
     for share, (lo, hi) in results.items():
@@ -284,7 +253,7 @@ N cores; fresh JVM per level; best of {REPS} timed runs after a warmup;
 seconds, lower is better. local[{CORES_LO}] -> local[{CORES_HI}] is the
 faithful in-guest N -> 4N pair per BENCH/BREAKDOWN.md (the 16/32-core
 levels hit the measured KVM host ceiling, which would confound the
-layout contrast being tested here).
+salt contrast being tested here).
 
 {body}
 ## Reading
@@ -295,21 +264,11 @@ layout contrast being tested here).
   stage is a wash (within noise at every share) — recorded as measured
   numbers, not a claim. The explicit two-phase stage earns its keep
   where partials cannot combine map-side: the stored-partial
-  continuous-aggregate path, and above all the kernel path below.
-- **ordered Arrow kernel (compression)**: no combine exists for an
-  ordered codec, so the shuffle layout IS the skew strategy. Keying the
-  encode shuffle on (conversation, block) splits the mega-thread into
-  {MEGA_DAYS} independent day-blocks; keying on the conversation alone
-  serializes the whole mega-thread into ONE task. A 10% task cannot
-  dominate wall-clock below ~10 effective cores — hence the second
-  fixture: at 35% the key-only layout's straggler is the wall-clock
-  floor already at 4N in-guest cores (slower wall AND collapsed N->4N
-  efficiency), while the (key, block) split keeps scaling. At fleet
-  scale the same arithmetic is fatal for key-only at 10% too: one task
-  holding 10% of ALL turns caps effective parallelism at ~10 executors
-  regardless of fleet size, while the split's ceiling is the number of
-  (conversation, day) blocks (~10^9 at the 10^12-turn target). The
-  split is what keeps the north rule's >= 0.8 criterion satisfiable.
+  continuous-aggregate path, and the compression kernel, whose encode
+  shuffle keys on (conversation, block) so the mega-thread splits into
+  {MEGA_DAYS} independent day-blocks. That kernel's contrast with a
+  key-only shuffle was measured by an earlier version of this script
+  (this file's history); the key-only layout is gone from the engine.
 
 Raw per-level JSON:
 

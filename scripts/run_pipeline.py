@@ -6,9 +6,10 @@ multi-executor cluster; this script is the driver program. It never
 imports anything outside the stdlib + pyspark + the shipped package.
 
 Modes:
-  full         one-shot rollup cascade over a parquet/snapshot input,
-               tier tables written sorted by (bucket, conv_id) for
-               min-max pruning, optional block compression of one tier
+  full         one-shot rollup cascade over a parquet/snapshot input;
+               every tier replaced wholesale in the p_date-partitioned
+               tier-store layout (plans/tier_store.py) that incremental
+               and expire use, optional block compression of one tier
   incremental  fold unprocessed snapshots of a SnapshotTable into
                continuously-maintained tier state (resumable, manifest'd)
   expire       apply tier retention horizons as-of a date
@@ -151,13 +152,23 @@ def main(argv=None) -> None:
     report: dict = {"mode": args.mode, "tiers": {}}
 
     if args.mode == "full":
-        from tablecloth_time_spark.operators.compress import compress_series
-        from tablecloth_time_spark.operators.rollup import rollup_cascade
+        from tablecloth_time_spark.operators.rollup import (
+            cascade_partials,
+            finalize_partials,
+        )
+        from tablecloth_time_spark.plans.continuous import compress_tier
+        from tablecloth_time_spark.plans.tier_store import (
+            P_DATE,
+            ParquetTierStore,
+            partition_date,
+        )
 
+        if args.compress_tier and args.compress_tier not in tiers:
+            raise SystemExit(f"--compress-tier {args.compress_tier} is not in --tiers")
         df = spark.read.parquet(args.input)
         if "text_len" not in df.columns and "text" in df.columns:
             df = df.withColumn("text_len", F.length("text").cast("long"))
-        out = rollup_cascade(
+        partials = cascade_partials(
             df,
             [args.key],
             args.ts_col,
@@ -166,36 +177,28 @@ def main(argv=None) -> None:
             order_cols=order_cols,
             salt=args.salt,
         )
-        for tier, tdf in out.items():
-            path = f"{args.output}/tiers/{tier}"
-            # sorted by (bucket, key): parquet min-max stats then prune
-            # slice queries on bucket ranges — the distributed analogue of
-            # the reference's sorted-column binary search
-            (
-                tdf.repartitionByRange(64, "bucket")
-                .sortWithinPartitions("bucket", args.key)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-            report["tiers"][tier] = spark.read.parquet(path).count()
-        if args.compress_tier:
-            blocks = compress_series(
-                out[args.compress_tier],
-                ts_col="bucket",
-                value_cols={"n_turns": "int", "sum_chars": "int"},
-                key_col=args.key,
-                block_unit="day",
-            )
-            bpath = f"{args.output}/blocks/{args.compress_tier}"
-            blocks.write.mode("overwrite").parquet(bpath)
-            s = spark.read.parquet(bpath).agg(
-                F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            report["compression"] = {
-                "n_blocks": s["n"],
-                "ratio": round(s["raw"] / s["enc"], 3) if s["enc"] else None,
-            }
+        store = ParquetTierStore(spark, args.output)
+        try:
+            for tier, partial in partials.items():
+                final = finalize_partials(
+                    partial, [args.key], DEFAULT_AGGS
+                ).withColumn(P_DATE, partition_date("bucket"))
+                days = [r[0] for r in final.select(P_DATE).distinct().collect()]
+                info = store.stage(tier, final, days, "full")
+                store.commit(tier, info)
+                # a re-run replaces the tier wholesale: drop the days this
+                # output does not cover (their blocks go with them)
+                store.drop_partitions(
+                    tier, sorted(set(store.list_partitions(tier)) - set(days))
+                )
+                report["tiers"][tier] = info["rows_out"]
+                if tier == args.compress_tier:
+                    report["compression"] = compress_tier(
+                        store, tier, final,
+                        {"n_turns": "int", "sum_chars": "int"}, args.key, days,
+                    )
+        finally:
+            next(iter(partials.values())).unpersist()  # the cached finest
 
     elif args.mode == "incremental":
         from tablecloth_time_spark.plans.continuous import (

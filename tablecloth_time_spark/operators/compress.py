@@ -544,7 +544,6 @@ def compress_series(
     block_interval: int = 1,
     block_unit: str = "day",
     order_cols: list[str] | None = None,
-    skew_split: bool = True,
 ) -> DataFrame:
     """Compress per-key series into binary blocks, one row per (key, block).
 
@@ -553,14 +552,11 @@ def compress_series(
     delta-of-delta over epoch-millis. Grouping (key, block_start) bounds
     per-task state: a mega-thread spanning months splits into per-day blocks
     that land on different tasks, so no executor ever materializes a whole
-    mega-conversation — the skew story at 10^12 turns.
-
-    ``skew_split`` is that salted repartition: the encode shuffle keys on
-    (key, block) — blocks are independent units, so this is the two-phase
-    split for the kernel path, where map-side combine can't help. False
-    shuffles on the key alone (one task holds a whole conversation — the
-    naive layout); it exists only to quantify the skew benefit
-    (BENCH/SKEW.md) and must not be used at scale.
+    mega-conversation — the skew story at 10^12 turns. The encode shuffle
+    keys on (key, block): blocks are independent units, so this is the
+    two-phase split for the kernel path, where map-side combine can't help
+    (a key-only shuffle put a whole mega-conversation in one task,
+    BENCH/SKEW.md).
     """
     order_cols = list(order_cols or [ts_col])
     schema = _block_schema(value_cols)
@@ -659,8 +655,7 @@ def compress_series(
     from tablecloth_time_spark.operators._grouped import stream_nparts
 
     nparts = stream_nparts(spark)
-    shuffle_cols = ["__key", "__block"] if skew_split else ["__key"]
-    part = prepared.repartition(nparts, *shuffle_cols).sortWithinPartitions(
+    part = prepared.repartition(nparts, "__key", "__block").sortWithinPartitions(
         "__key", "__block", *[f"__o{i}" for i in range(n_sort)]
     )
     return part.mapInPandas(encode_stream, schema)

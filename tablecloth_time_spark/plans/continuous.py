@@ -48,7 +48,7 @@ import os
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tablecloth_time_spark.operators.compress import compress_series
@@ -74,6 +74,47 @@ def manifest_path(root: str) -> str:
     under its root dir — the single owner of the filename convention
     (run_pipeline.py's SparkSession-free status mode reads it too)."""
     return os.path.join(root, "manifest.json")
+
+
+def compress_tier(
+    store: TierStore,
+    tier: str,
+    final: DataFrame,
+    value_cols: dict[str, str],
+    key_col: str,
+    dirty: list[str],
+) -> dict:
+    """Encode ``final`` (finalized rows of ``tier`` covering the ``dirty``
+    partitions) into day blocks, write them through ``store.write_blocks``
+    and return the manifest's compression record.
+
+    The encoder runs once: the record is observed on the frame the store
+    writes (``DataFrame.observe``), not computed by a second action."""
+    obs = Observation()
+    blocks = (
+        compress_series(
+            final, ts_col=BUCKET, value_cols=value_cols, key_col=key_col,
+            block_unit="day",
+        )
+        .withColumn(P_DATE, partition_date("block_start"))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n_blocks"),
+            F.sum("raw_bytes").alias("raw"),
+            F.sum("enc_bytes").alias("enc"),
+        )
+    )
+    store.write_blocks(tier, blocks)
+    stats = obs.get
+    raw, enc = int(stats["raw"] or 0), int(stats["enc"] or 0)
+    return {
+        "tier": tier,
+        "dirty_partitions": dirty,
+        "n_blocks": int(stats["n_blocks"]),
+        "raw_bytes": raw,
+        "enc_bytes": enc,
+        "compression_ratio": round(raw / enc, 3) if enc else None,
+    }
 
 
 @dataclass(frozen=True)
@@ -219,41 +260,40 @@ class ContinuousAggregate:
             inc, self.keys, self.ts_col, self.aggs,
             {t.name: (t.interval, t.unit) for t in self.tiers}, self.order_cols,
         )
-        finest_partial = partials[self.tiers[0].name]
-
-        for tier in self.tiers:
-            info = run["tiers"].get(tier.name, {})
-            if info.get("status") == "completed":
-                continue  # resume: this tier's merge already landed
-            if info.get("status") == "staged":
-                # resume mid-commit: the staged output is the FULL new
-                # content of the dirty partitions (not a delta), so
-                # replaying the swap is idempotent — no double count
+        try:
+            for tier in self.tiers:
+                info = run["tiers"].get(tier.name, {})
+                if info.get("status") == "completed":
+                    continue  # resume: this tier's merge already landed
+                if info.get("status") == "staged":
+                    # resume mid-commit: the staged output is the FULL new
+                    # content of the dirty partitions (not a delta), so
+                    # replaying the swap is idempotent — no double count
+                    self.store.commit(tier.name, info)
+                    info["status"] = "completed"
+                    self._commit_manifest(m)
+                    continue
+                info = self._stage_tier(tier, partials[tier.name], run_id)
+                info["status"] = "staged"
+                run["tiers"][tier.name] = info
+                self._commit_manifest(m)
+                if fail_after_tier == f"stage:{tier.name}":
+                    raise RuntimeError(
+                        f"injected failure after staging tier {tier.name}"
+                    )
                 self.store.commit(tier.name, info)
                 info["status"] = "completed"
                 self._commit_manifest(m)
-                continue
-            info = self._stage_tier(tier, partials[tier.name], run_id)
-            info["status"] = "staged"
-            run["tiers"][tier.name] = info
-            self._commit_manifest(m)
-            if fail_after_tier == f"stage:{tier.name}":
-                finest_partial.unpersist()
-                raise RuntimeError(
-                    f"injected failure after staging tier {tier.name}"
-                )
-            self.store.commit(tier.name, info)
-            info["status"] = "completed"
-            self._commit_manifest(m)
-            if fail_after_tier == tier.name:
-                finest_partial.unpersist()
-                raise RuntimeError(f"injected failure after tier {tier.name}")
+                if fail_after_tier == tier.name:
+                    raise RuntimeError(f"injected failure after tier {tier.name}")
 
-        if self.compress is not None and run.get("compression") is None:
-            run["compression"] = self._refresh_blocks(run)
-            self._commit_manifest(m)
+            if self.compress is not None and run.get("compression") is None:
+                run["compression"] = self._refresh_blocks(run)
+                self._commit_manifest(m)
+        finally:
+            # the refresh owns the cascade's cache, whatever ends it
+            partials[self.tiers[0].name].unpersist()
 
-        finest_partial.unpersist()
         run["status"] = "completed"
         run["rows_in"] = rows_in
         m["last_snapshot"] = current
@@ -288,32 +328,12 @@ class ContinuousAggregate:
     def _refresh_blocks(self, run: dict) -> dict:
         """Recompress the compress-tier's dirty partitions into blocks."""
         spec = self.compress
-        tier_info = run["tiers"][spec.tier]
-        dirty = tier_info["dirty_partitions"]
+        dirty = run["tiers"][spec.tier]["dirty_partitions"]
         state = self.store.read_state(spec.tier).filter(F.col(P_DATE).isin(dirty))
-        final = finalize_partials(state, self.keys, self.aggs)
-        blocks = compress_series(
-            final,
-            ts_col=BUCKET,
-            value_cols=spec.value_cols,
-            key_col=self.keys[0],
-            block_unit="day",
-        ).withColumn(P_DATE, partition_date("block_start"))
-        stats = blocks.agg(
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-            F.count(F.lit(1)).alias("n_blocks"),
-        ).collect()[0]
-        self.store.write_blocks(spec.tier, blocks)
-        raw, enc = int(stats["raw"] or 0), int(stats["enc"] or 0)
-        return {
-            "tier": spec.tier,
-            "dirty_partitions": dirty,
-            "n_blocks": int(stats["n_blocks"]),
-            "raw_bytes": raw,
-            "enc_bytes": enc,
-            "compression_ratio": round(raw / enc, 3) if enc else None,
-        }
+        return compress_tier(
+            self.store, spec.tier, finalize_partials(state, self.keys, self.aggs),
+            spec.value_cols, self.keys[0], dirty,
+        )
 
     # -- reads --------------------------------------------------------------
 

@@ -7,6 +7,12 @@ Consumers never touch paths — proven by :class:`MemoryTierStore`, which has
 no filesystem at all (tests/test_continuous.py runs the full refresh/resume
 suite against it).
 
+The ``p_date`` layout here is the only tier-table layout. A full run
+(``scripts/run_pipeline.py full``) writes through the same ``stage`` /
+``commit`` / ``write_blocks`` calls as a refresh: it stages every partition
+of each finalized tier, then drops the live partitions its output does not
+cover. So ``expire`` drops partitions of either kind of output.
+
 The protocol is deliberately shaped so a real Iceberg binding is *only*
 the table format's native operations, no engine changes:
 
@@ -48,6 +54,10 @@ Contract details the engine relies on:
   date of ``bucket`` / ``block_start``, see :func:`partition_date`), so a
   retention expiry never leaves the compressed tier serving points its
   tier no longer holds.
+- ``write_blocks(tier, blocks)`` must run an action on ``blocks`` before
+  it returns: the engine takes the manifest's compression record from
+  metrics observed on that run (``continuous.compress_tier``), and waits
+  for them.
 - ``read_state`` / ``read_blocks`` return a frame over the store's state
   as of the call: a commit made since the previous read, by this or any
   other process, shows up on the next one.
@@ -60,6 +70,7 @@ import shutil
 from typing import Protocol
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -77,6 +88,21 @@ def partition_date(ts: Column | str) -> Column:
     that rewrites a dirty tier day rewrites exactly that day's blocks."""
     day = F.floor(to_epoch_millis(ts) / 86_400_000).cast("int")
     return F.date_from_unix_date(day).cast("string")
+
+
+def _footer_rows(path: str) -> dict[str, int]:
+    """{p_date: rows} of a ``p_date``-partitioned Parquet directory, summed
+    from its files' footers: no Spark job, no data page read."""
+    out = {}
+    for entry in os.listdir(path):
+        if entry.startswith(f"{P_DATE}="):
+            part = os.path.join(path, entry)
+            out[entry.split("=", 1)[1]] = sum(
+                pq.read_metadata(os.path.join(part, f)).num_rows
+                for f in os.listdir(part)
+                if f.endswith(".parquet")
+            )
+    return out
 
 
 class TierStore(Protocol):
@@ -104,6 +130,9 @@ class ParquetTierStore:
     per-partition ``os.replace`` (the filesystem analogue of Iceberg's
     commit-by-metadata-swap).
 
+    ``stage`` takes its lineage (``partition_rows``) from the footers of
+    the files it just wrote: no Spark job runs after the write.
+
     Each table's schema is inferred once, on its first read, and every later
     read supplies it: inferring it again costs a Spark job that reads
     Parquet footers. The file listing is not cached, so every read sees the
@@ -114,16 +143,14 @@ class ParquetTierStore:
         self.root = root
         self._schemas: dict[str, StructType] = {}  # table path -> schema
 
-    def _read(self, path: str, schema_of: str | None = None) -> DataFrame:
-        """Read the partitioned table at ``path`` with the cached schema of
-        the table at ``schema_of`` (default: ``path`` itself); the first
-        read infers that schema and caches it."""
-        key = schema_of or path
-        schema = self._schemas.get(key)
+    def _read(self, path: str) -> DataFrame:
+        """Read the partitioned table at ``path`` with its cached schema;
+        the first read infers that schema and caches it."""
+        schema = self._schemas.get(path)
         if schema is not None:
             return self.spark.read.schema(schema).parquet(path)
         df = self.spark.read.parquet(path)
-        self._schemas[key] = df.schema
+        self._schemas[path] = df.schema
         return df
 
     def _tier_path(self, tier: str) -> str:
@@ -156,16 +183,7 @@ class ParquetTierStore:
                 "rows_out": 0,
             }
         merged.write.mode("overwrite").partitionBy(P_DATE).parquet(staged_path)
-        # per-partition lineage from the staged files (one row per day);
-        # staged content has the live tier's schema, so this read fills or
-        # reuses the tier's cached schema
-        part_counts = {
-            r[0]: r[1]
-            for r in self._read(staged_path, schema_of=self._tier_path(tier))
-            .groupBy(F.col(P_DATE).cast("string").alias(P_DATE))
-            .count()
-            .collect()
-        }
+        part_counts = _footer_rows(staged_path)
         return {
             "staged_path": staged_path,
             "dirty_partitions": sorted(dirty),

@@ -111,3 +111,17 @@ def run_microbatches(spark, tmp_path, frames, op, schema=None):
 def executed_plan(df) -> str:
     """The physical plan Spark would run for ``df``, as its plan string."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def new_jobs(spark, fn) -> set[int]:
+    """IDs of the Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs():
+        bus.waitUntilEmpty()  # the status tracker learns of jobs from the bus
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = jobs()
+    fn()
+    return jobs() - before

@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.conftest import session_conf
 from tablecloth_time_spark.operators.compress import (
     compress_series,
     decode_floats_xor,
@@ -142,27 +143,30 @@ def test_spark_compress_roundtrip(spark, transcripts_df):
     )
 
 
-def test_skew_split_layouts_identical(spark, transcripts_df):
-    """skew_split=False (key-only shuffle, the naive layout measured in
-    BENCH/SKEW.md) must produce byte-identical blocks to the default
-    (key, block) split — the layout only changes which task encodes a
-    block, never its bytes."""
+def test_blocks_identical_across_shuffle_partitions(spark, transcripts_df):
+    """The (key, block) encode shuffle only decides which task encodes a
+    block, never its bytes: blocks are byte-identical at 1 and 64 shuffle
+    partitions."""
     from pyspark.sql import functions as F
 
     src = transcripts_df.withColumn("text_len", F.length("text").cast("long"))
-    kwargs = dict(
-        ts_col="ts",
-        value_cols={"text_len": "int"},
-        key_col="conv_id",
-        block_unit="day",
-        order_cols=["ts", "turn_idx"],
-    )
-    split = compress_series(src, **kwargs).toPandas()
-    keyonly = compress_series(src, skew_split=False, **kwargs).toPandas()
-    for pdf in (split, keyonly):
-        pdf.sort_values(["conv_id", "block_start"], inplace=True, kind="stable")
-        pdf.reset_index(drop=True, inplace=True)
-    pd.testing.assert_frame_equal(split, keyonly)
+    got = []
+    for n in ("1", "64"):
+        with session_conf(spark, {"spark.sql.shuffle.partitions": n}):
+            pdf = compress_series(
+                src,
+                ts_col="ts",
+                value_cols={"text_len": "int"},
+                key_col="conv_id",
+                block_unit="day",
+                order_cols=["ts", "turn_idx"],
+            ).toPandas()
+        got.append(
+            pdf.sort_values(["conv_id", "block_start"], kind="stable")
+            .reset_index(drop=True)
+        )
+    assert len(got[0]) > 0
+    pd.testing.assert_frame_equal(got[0], got[1])
 
 
 def test_batched_encoders_byte_identical():

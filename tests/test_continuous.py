@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import session_conf
+from tests.conftest import new_jobs, session_conf
 from tablecloth_time_spark.operators.rollup import rollup
 from tablecloth_time_spark.plans.continuous import (
     CompressSpec,
@@ -19,6 +19,7 @@ from tablecloth_time_spark.plans.continuous import (
     TierSpec,
 )
 from tablecloth_time_spark.plans.snapshots import SnapshotTable
+from tablecloth_time_spark.plans.tier_store import MemoryTierStore, ParquetTierStore
 from tablecloth_time_spark.sources.transcripts import (
     TRANSCRIPTS_SCHEMA,
     generate_transcripts_pandas,
@@ -580,3 +581,130 @@ def test_continuous_histogram_tier_serves_quantiles(spark, tmp_path, batches):
     )
     cols = ["role", "bucket", "total", "p50", "p95", "p99"]
     pd.testing.assert_frame_equal(got_q[cols], exp_q[cols])
+
+
+# -- each write pass runs once ------------------------------------------------
+
+CODECS = {"n_turns": "int"}
+
+
+class _FailingStageStore(ParquetTierStore):
+    def stage(self, tier, merged, dirty, run_id):
+        raise OSError("staging area unavailable")
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_failed_stage_leaves_no_cached_partial(spark, tmp_path, batches):
+    """The refresh owns the cascade's cached finest partial: a real error
+    from the store still unpersists it."""
+    df1, _ = batches
+    src = SnapshotTable(spark, str(tmp_path / "src"))
+    root = str(tmp_path / "agg")
+    ca = ContinuousAggregate(
+        spark, src, root, keys=["conv_id"], ts_col="ts", aggs=AGGS, tiers=TIERS,
+        order_cols=["ts", "turn_idx"], store=_FailingStageStore(spark, root),
+    )
+    src.append(df1)
+    before = _persistent_rdds(spark)
+    with pytest.raises(OSError, match="staging area"):
+        ca.refresh()
+    assert _persistent_rdds(spark) == before
+
+
+def _encoder_rows(spark, fn) -> list[int]:
+    """Rows out of each block-encoder run (the ``MapInPandas`` node) in the
+    SQL executions ``fn()`` starts, from the SQL status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        runs = sql.executionsList()
+        return [runs.apply(i).executionId() for i in range(runs.size())]
+
+    before = set(executions())
+    fn()
+    rows = []
+    for eid in sorted(set(executions()) - before):
+        values = sql.executionMetrics(eid)
+        nodes = sql.planGraph(eid).allNodes()
+        for node in (nodes.apply(i) for i in range(nodes.size())):
+            if node.name() != "MapInPandas":
+                continue
+            metrics = node.metrics()
+            for m in (metrics.apply(i) for i in range(metrics.size())):
+                if m.name() == "number of output rows":
+                    rows.append(int(values.get(m.accumulatorId()).get().replace(",", "")))
+    return rows
+
+
+@pytest.fixture(params=["parquet", "memory"])
+def make_store(request, spark):
+    if request.param == "parquet":
+        return lambda root: ParquetTierStore(spark, root)
+    return lambda root: MemoryTierStore(spark)
+
+
+def test_refresh_encodes_blocks_once(spark, tmp_path, make_store):
+    """A refresh with a CompressSpec runs the block encoder once, and its
+    manifest record sums exactly the blocks stored for the dirty days."""
+    pdf = generate_transcripts_pandas(n_conv=40, seed=42)
+    pdf = pdf.sort_values("ts", kind="stable").reset_index(drop=True)
+    cut = int(len(pdf) * 0.9)
+    src = SnapshotTable(spark, str(tmp_path / "src"))
+    root = str(tmp_path / "agg")
+    ca = ContinuousAggregate(
+        spark, src, root, keys=["conv_id"], ts_col="ts",
+        aggs={"n_turns": ("count", "turn_idx")},
+        tiers=(TierSpec("minute", 1, "minute"), TierSpec("day", 1, "day")),
+        order_cols=["ts", "turn_idx"],
+        compress=CompressSpec("minute", dict(CODECS)),
+        store=make_store(root),
+    )
+    for part in (pdf.iloc[:cut], pdf.iloc[cut:]):
+        src.append(spark.createDataFrame(part, schema=TRANSCRIPTS_SCHEMA))
+        runs = []
+        rows = _encoder_rows(spark, lambda: runs.append(ca.refresh()))
+        comp = runs[0]["compression"]
+        assert rows == [comp["n_blocks"]]
+
+        dirty = comp["dirty_partitions"]
+        stored = (
+            ca.read_blocks("minute")
+            .filter(F.col("p_date").cast("string").isin(dirty))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("raw_bytes").alias("raw"),
+                F.sum("enc_bytes").alias("enc"),
+            )
+            .collect()[0]
+        )
+        assert (comp["n_blocks"], comp["raw_bytes"], comp["enc_bytes"]) == (
+            stored["n"], stored["raw"], stored["enc"],
+        )
+    # the second refresh dirtied some days only: its sums above covered a
+    # strict subset of the stored blocks
+    assert len(dirty) < len(ca.store.list_partitions("minute"))
+
+
+def test_stage_starts_no_job_after_its_write(spark, tmp_path, make_store):
+    """``stage`` runs the jobs of its write and nothing more: its lineage
+    comes from the write (Parquet footers; the pandas frame in memory)."""
+    days = ["2024-01-01", "2024-01-02"]
+    frame = spark.createDataFrame(
+        pd.DataFrame({"conv_id": ["a", "b", "c"], "v": [1, 2, 3], "p_date": days + days[:1]})
+    )
+    store = make_store(str(tmp_path / "store"))
+    if isinstance(store, MemoryTierStore):
+        write = frame.toPandas
+    else:
+        plain = str(tmp_path / "plain")
+        write = lambda: frame.write.mode("overwrite").partitionBy("p_date").parquet(plain)  # noqa: E731
+    infos = []
+    staged = new_jobs(spark, lambda: infos.append(store.stage("minute", frame, days, "r1")))
+    assert len(staged) == len(new_jobs(spark, write))
+    assert infos[0]["partition_rows"] == {"2024-01-01": 2, "2024-01-02": 1}
+    assert infos[0]["rows_out"] == 3

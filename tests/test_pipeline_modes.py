@@ -1,12 +1,16 @@
-"""run_pipeline.py incremental/expire modes (in-process, no spark-submit).
+"""run_pipeline.py modes in-process (no spark-submit), through the argparse
+entry.
 
 The full-mode spark-submit path is covered end-to-end by tests/test_submit.py;
-these cover the other two driver modes through the same argparse entry.
+here full mode is checked for its layout: its output is the tier-store
+layout that expire drops partitions of, and a re-run replaces it.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -122,3 +126,68 @@ def test_status_mode(spark, snap_source, capsys):
 
     with pytest.raises(SystemExit, match="no manifest"):
         pipeline_main(["status", "--output", f"{base}/nowhere"])
+
+
+def _p_dates(root: str, table: str) -> list[str]:
+    path = os.path.join(root, table)
+    return sorted(e.split("=", 1)[1] for e in os.listdir(path) if e.startswith("p_date="))
+
+
+def _run_full(input_dir: str, out: str, capsys) -> dict:
+    pipeline_main(
+        [
+            "full",
+            "--input", input_dir,
+            "--output", out,
+            "--tiers", "minute,hour",
+            "--compress-tier", "minute",
+        ]
+    )
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_expire_drops_full_mode_partitions(spark, transcripts_df, tmp_path, capsys):
+    """Full mode writes p_date partitions, so expire drops every minute-tier
+    and block day below the horizon and keeps the hour tier whole."""
+    transcripts_df.write.parquet(str(tmp_path / "input"))
+    out = str(tmp_path / "full")
+    report = _run_full(str(tmp_path / "input"), out, capsys)
+    assert report["compression"]["n_blocks"] > 0
+    hour_days = _p_dates(out, "tiers/hour")
+
+    max_date = transcripts_df.agg(F.max(F.to_date("ts"))).collect()[0][0]
+    pipeline_main(
+        [
+            "expire",
+            "--output", out,
+            "--tiers", "minute,hour",
+            "--retention", "minute=5",
+            "--as-of", str(max_date),
+        ]
+    )
+    expired = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["expired"]
+    horizon = str(max_date - dt.timedelta(days=5))
+    assert expired["minute"] and "hour" not in expired
+    for table in ("tiers/minute", "blocks/minute"):
+        days = _p_dates(out, table)
+        assert days and days[0] >= horizon, table
+    assert _p_dates(out, "tiers/hour") == hour_days and hour_days[0] < horizon
+
+
+def test_full_mode_rerun_replaces_tiers(spark, transcripts_df, tmp_path, capsys):
+    """A second full run over fewer days leaves only its own days, in the
+    tiers and in the blocks, with the rows it reports."""
+    out = str(tmp_path / "full")
+    transcripts_df.write.parquet(str(tmp_path / "all"))
+    _run_full(str(tmp_path / "all"), out, capsys)
+
+    days = sorted({str(r[0]) for r in transcripts_df.select(F.to_date("ts")).collect()})
+    early = transcripts_df.filter(F.to_date("ts") < days[len(days) // 2])
+    early.write.parquet(str(tmp_path / "early"))
+    report = _run_full(str(tmp_path / "early"), out, capsys)
+    want = days[: len(days) // 2]
+    for table in ("tiers/minute", "tiers/hour", "blocks/minute"):
+        assert _p_dates(out, table) == want, table
+    minute = spark.read.parquet(f"{out}/tiers/minute")
+    assert minute.count() == report["tiers"]["minute"] > 0
+    assert spark.read.parquet(f"{out}/blocks/minute").count() == report["compression"]["n_blocks"]

@@ -15,7 +15,7 @@ import re
 
 import pandas as pd
 
-from tests.conftest import executed_plan, session_conf
+from tests.conftest import executed_plan, new_jobs, session_conf
 from tablecloth_time_spark.operators.compress import read_blocks_slice
 from tablecloth_time_spark.operators.slice import slice_time
 from tablecloth_time_spark.plans.continuous import (
@@ -67,20 +67,6 @@ def _points(df) -> list[tuple]:
     )
 
 
-def _new_jobs(spark, fn) -> set[int]:
-    """IDs of the Spark jobs ``fn()`` starts."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-
-    def jobs():
-        bus.waitUntilEmpty()  # the status tracker learns of jobs from the bus
-        return set(sc.statusTracker().getJobIdsForGroup(None))
-
-    before = jobs()
-    fn()
-    return jobs() - before
-
-
 def _p_dates(df) -> set[str]:
     return {str(r[0]) for r in df.select("p_date").distinct().collect()}
 
@@ -106,12 +92,13 @@ def test_repeat_reads_start_no_spark_job(spark, tmp_path):
     store = ParquetTierStore(spark, ca.root)
     # a fresh store infers each schema on its first read: one job at least,
     # which also shows the job count below can see a read's jobs
-    assert _new_jobs(spark, lambda: store.read_blocks("minute"))
-    assert _new_jobs(spark, lambda: store.read_state("minute"))
-    assert _new_jobs(spark, lambda: store.read_blocks("minute")) == set()
-    assert _new_jobs(spark, lambda: store.read_state("minute")) == set()
-    # the aggregate's own store learned the tier schema while staging
-    assert _new_jobs(spark, lambda: ca.store.read_state("minute")) == set()
+    assert new_jobs(spark, lambda: store.read_blocks("minute"))
+    assert new_jobs(spark, lambda: store.read_state("minute"))
+    assert new_jobs(spark, lambda: store.read_blocks("minute")) == set()
+    assert new_jobs(spark, lambda: store.read_state("minute")) == set()
+    # the aggregate's own store learned the tier schema when the refresh
+    # read the tier back to compress it (staging reads nothing back)
+    assert new_jobs(spark, lambda: ca.store.read_state("minute")) == set()
 
 
 def test_read_after_refresh_sees_new_partitions(spark, tmp_path):
