@@ -6,21 +6,25 @@ multi-executor cluster; this script is the driver program. It never
 imports anything outside the stdlib + pyspark + the shipped package.
 
 Modes:
-  full         one-shot rollup cascade over a parquet/snapshot input;
-               every tier replaced wholesale in the p_date-partitioned
-               tier-store layout (plans/tier_store.py) that incremental
-               and expire use, optional block compression of one tier
+  full         clear the output's tiers and manifest, then fold the whole
+               parquet input into them as one refresh (the input is a
+               one-snapshot source): the same tier-store layout, manifest
+               and resume as incremental, so status and expire work on
+               its output
   incremental  fold unprocessed snapshots of a SnapshotTable into
                continuously-maintained tier state (resumable, manifest'd)
   expire       apply tier retention horizons as-of a date
   status       print the checkpoint manifest summary (runs, snapshots,
                per-tier rows, compression ratios) without starting a job
 
+Both refresh modes compress --compress-tier into day blocks; a tier spec
+that names a tier outside --tiers exits before any job runs.
+
 Examples:
   spark-submit --py-files dist/tablecloth_time_spark.zip \\
       scripts/run_pipeline.py full \\
       --input /data/transcripts --output /data/tiers \\
-      --tiers second,minute,hour,day --compress-tier minute --salt 16
+      --tiers second,minute,hour,day --compress-tier minute
 
   spark-submit ... run_pipeline.py incremental \\
       --source-table /data/transcripts_snap --output /data/cagg
@@ -30,6 +34,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -61,7 +66,6 @@ def parse_args(argv):
     p.add_argument("--key", default="conv_id")
     p.add_argument("--ts-col", default="ts")
     p.add_argument("--order-cols", default="ts,turn_idx")
-    p.add_argument("--salt", type=int, default=0)
     p.add_argument("--compress-tier", default=None)
     p.add_argument(
         "--retention",
@@ -74,14 +78,77 @@ def parse_args(argv):
     return p.parse_args(argv)
 
 
-def _parse_retention(spec: str | None) -> dict[str, int]:
-    if not spec:
-        return {}
+def _parse_retention(spec: str | None, tiers: list[str]) -> dict[str, int]:
     out = {}
-    for part in spec.split(","):
-        tier, _, days = part.strip().partition("=")
+    for part in filter(None, (p.strip() for p in (spec or "").split(","))):
+        tier, _, days = map(str.strip, part.partition("="))
+        if tier not in tiers:
+            raise SystemExit(f"--retention {part!r}: {tier!r} is not in --tiers")
+        if not days.isdigit():
+            raise SystemExit(f"--retention {part!r}: want <tier>=<whole days>")
         out[tier] = int(days)
     return out
+
+
+def _with_text_len(df):
+    """Derive ``text_len`` (an input of ``DEFAULT_AGGS``) from raw ``text``."""
+    from pyspark.sql import functions as F
+
+    if "text_len" not in df.columns and "text" in df.columns:
+        return df.withColumn("text_len", F.length("text").cast("long"))
+    return df
+
+
+def _aggregate(spark, args):
+    """The run's ContinuousAggregate, for every mode that starts Spark.
+
+    ``full`` reads ``--input`` as one snapshot, ``incremental`` the
+    snapshots of ``--source-table``; ``expire`` reads no source. A tier
+    spec that names a tier outside ``--tiers`` exits naming the entry."""
+    from tablecloth_time_spark.plans.continuous import (
+        CompressSpec,
+        ContinuousAggregate,
+        TierSpec,
+    )
+    from tablecloth_time_spark.plans.snapshots import FrameSource, SnapshotTable
+
+    tiers = [t.strip() for t in args.tiers.split(",") if t.strip()]
+    for t in tiers:
+        if t not in TIER_UNITS:
+            raise SystemExit(f"--tiers: unknown tier {t!r} (known: {','.join(TIER_UNITS)})")
+    retention = _parse_retention(args.retention, tiers)
+    compress = None
+    if args.compress_tier:
+        if args.compress_tier not in tiers:
+            raise SystemExit(f"--compress-tier {args.compress_tier!r} is not in --tiers")
+        compress = CompressSpec(args.compress_tier, {"n_turns": "int", "sum_chars": "int"})
+    if args.mode == "full":
+        source = FrameSource(spark.read.parquet(args.input))
+    elif args.mode == "incremental":
+        source = SnapshotTable(spark, args.source_table)
+    else:
+        source = FrameSource(None)
+    return ContinuousAggregate(
+        spark, source, args.output, [args.key], args.ts_col, DEFAULT_AGGS,
+        tiers=tuple(
+            TierSpec(t, *TIER_UNITS[t], retention_days=retention.get(t)) for t in tiers
+        ),
+        order_cols=[c.strip() for c in args.order_cols.split(",")],
+        compress=compress,
+        prepare=_with_text_len,
+    )
+
+
+def _clear(ca) -> None:
+    """Empty the store's tiers (their blocks go with them) and remove the
+    manifest, so the refresh that follows starts from nothing. The manifest
+    goes first: a crash part-way leaves no record that claims the tiers."""
+    from tablecloth_time_spark.plans.continuous import manifest_path
+
+    if os.path.exists(manifest_path(ca.root)):
+        os.remove(manifest_path(ca.root))
+    for tier in ca.tiers:
+        ca.store.drop_partitions(tier.name, ca.store.list_partitions(tier.name))
 
 
 def main(argv=None) -> None:
@@ -90,8 +157,6 @@ def main(argv=None) -> None:
     if args.mode == "status":
         # manifest-only: no SparkSession, safe to run beside a live job
         # (importing the plans module is side-effect-free)
-        import os
-
         from tablecloth_time_spark.plans.continuous import manifest_path
 
         path = manifest_path(args.output)
@@ -136,8 +201,15 @@ def main(argv=None) -> None:
         )
         return
 
+    if args.mode == "expire" and not args.as_of:
+        raise SystemExit("expire mode requires --as-of YYYY-MM-DD")
+    if args.mode == "expire" and not args.retention:
+        raise SystemExit(
+            "expire mode requires --retention (e.g. 'minute=90,hour=365')"
+            " — without it every tier is kept forever and expiry is a noop"
+        )
+
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     preexisting = SparkSession.getActiveSession() is not None
     builder = SparkSession.builder.appName("tts-pipeline").config(
@@ -147,117 +219,18 @@ def main(argv=None) -> None:
         builder = builder.master(args.master)
     spark = builder.getOrCreate()
 
-    tiers = [t.strip() for t in args.tiers.split(",") if t.strip()]
-    order_cols = [c.strip() for c in args.order_cols.split(",")]
-    report: dict = {"mode": args.mode, "tiers": {}}
-
-    if args.mode == "full":
-        from tablecloth_time_spark.operators.rollup import (
-            cascade_partials,
-            finalize_partials,
-        )
-        from tablecloth_time_spark.plans.continuous import compress_tier
-        from tablecloth_time_spark.plans.tier_store import (
-            P_DATE,
-            ParquetTierStore,
-            partition_date,
-        )
-
-        if args.compress_tier and args.compress_tier not in tiers:
-            raise SystemExit(f"--compress-tier {args.compress_tier} is not in --tiers")
-        df = spark.read.parquet(args.input)
-        if "text_len" not in df.columns and "text" in df.columns:
-            df = df.withColumn("text_len", F.length("text").cast("long"))
-        partials = cascade_partials(
-            df,
-            [args.key],
-            args.ts_col,
-            DEFAULT_AGGS,
-            tiers={t: TIER_UNITS[t] for t in tiers},
-            order_cols=order_cols,
-            salt=args.salt,
-        )
-        store = ParquetTierStore(spark, args.output)
-        try:
-            for tier, partial in partials.items():
-                final = finalize_partials(
-                    partial, [args.key], DEFAULT_AGGS
-                ).withColumn(P_DATE, partition_date("bucket"))
-                days = [r[0] for r in final.select(P_DATE).distinct().collect()]
-                info = store.stage(tier, final, days, "full")
-                store.commit(tier, info)
-                # a re-run replaces the tier wholesale: drop the days this
-                # output does not cover (their blocks go with them)
-                store.drop_partitions(
-                    tier, sorted(set(store.list_partitions(tier)) - set(days))
-                )
-                report["tiers"][tier] = info["rows_out"]
-                if tier == args.compress_tier:
-                    report["compression"] = compress_tier(
-                        store, tier, final,
-                        {"n_turns": "int", "sum_chars": "int"}, args.key, days,
-                    )
-        finally:
-            next(iter(partials.values())).unpersist()  # the cached finest
-
-    elif args.mode == "incremental":
-        from tablecloth_time_spark.plans.continuous import (
-            ContinuousAggregate,
-            TierSpec,
-        )
-        from tablecloth_time_spark.plans.snapshots import SnapshotTable
-
-        retention = _parse_retention(args.retention)
-
-        def derive_text_len(df):
-            if "text_len" not in df.columns and "text" in df.columns:
-                return df.withColumn("text_len", F.length("text").cast("long"))
-            return df
-
-        src = SnapshotTable(spark, args.source_table)
-        ca = ContinuousAggregate(
-            spark, src, args.output, [args.key], args.ts_col, DEFAULT_AGGS,
-            tiers=tuple(
-                TierSpec(t, *TIER_UNITS[t], retention_days=retention.get(t))
-                for t in tiers
-            ),
-            order_cols=order_cols,
-            prepare=derive_text_len,
-        )
-        run = ca.refresh()
-        report["run"] = {
-            "run_id": run.get("run_id"),
-            "status": run.get("status"),
-            "tiers": {
-                t: info.get("rows_out") for t, info in run.get("tiers", {}).items()
-            },
-        }
-
-    elif args.mode == "expire":
-        from tablecloth_time_spark.plans.continuous import (
-            ContinuousAggregate,
-            TierSpec,
-        )
-        from tablecloth_time_spark.plans.snapshots import SnapshotTable
-
-        if not args.as_of:
-            raise SystemExit("expire mode requires --as-of YYYY-MM-DD")
-        retention = _parse_retention(args.retention)
-        if not retention:
-            raise SystemExit(
-                "expire mode requires --retention (e.g. 'minute=90,hour=365')"
-                " — without it every tier is kept forever and expiry is a noop"
-            )
-        src = SnapshotTable(spark, args.source_table or args.output)
-        ca = ContinuousAggregate(
-            spark, src, args.output, [args.key], args.ts_col, DEFAULT_AGGS,
-            tiers=tuple(
-                TierSpec(t, *TIER_UNITS[t], retention_days=retention.get(t))
-                for t in tiers
-            ),
-            order_cols=order_cols,
-        )
+    ca = _aggregate(spark, args)
+    report: dict = {"mode": args.mode}
+    if args.mode == "expire":
         report["expired"] = ca.expire(args.as_of)
+    else:
+        if args.mode == "full":
+            _clear(ca)
+        run = ca.refresh()
+        rows = {t: info["rows_out"] for t, info in run["tiers"].items()}
+        report["run"] = {"run_id": run["run_id"], "status": run["status"], "tiers": rows}
+        report["tiers"] = rows
+        report["compression"] = run.get("compression")
 
     print(json.dumps(report))
     if not preexisting:  # don't tear down a host session (in-process tests)

@@ -24,7 +24,14 @@ Design (scale-first):
 - **One scan for all tiers.** The increment is partially aggregated once at
   the finest tier; coarser tiers re-merge those partials (sums of sums) —
   the same operators/rollup.cascade_partials that rollup_cascade
-  finalizes.
+  finalizes. The run's ``rows_in`` is observed (``DataFrame.observe``) on
+  that same scan as it fills the cached finest partial, so the increment is
+  read once; an increment whose finest partial covers no day completes as
+  a zero-row run.
+- **A full run is a refresh.** ``scripts/run_pipeline.py full`` clears the
+  store's tiers and the manifest, then runs one refresh over a
+  one-snapshot :class:`~tablecloth_time_spark.plans.snapshots.FrameSource`:
+  the same stage / commit / block encode, the same manifest and resume.
 - **Checkpoint manifest + resume.** Every refresh appends a run record
   keyed by its snapshot range; each tier commit is recorded with row counts
   and dirty partitions AFTER its write lands. A crashed run resumes by
@@ -35,9 +42,10 @@ Design (scale-first):
   deletes whole p_date partition directories (the Iceberg analogue is a
   metadata-only partition drop), recorded in the manifest.
 
-The source table is any :class:`~tablecloth_time_spark.plans.snapshots.
-SnapshotTable` (the Iceberg stand-in); swap in a real Iceberg table by
-implementing the same three-method interface over
+The source is anything with ``current_snapshot_id()`` and
+``read_incremental(after, until)``: a :class:`~tablecloth_time_spark.plans.
+snapshots.SnapshotTable` (the Iceberg stand-in) or a ``FrameSource``; swap
+in a real Iceberg table by implementing the same two methods over
 ``option("start-snapshot-id", ...)`` reads.
 """
 
@@ -58,7 +66,7 @@ from tablecloth_time_spark.operators.rollup import (
     finalize_partials,
     merge_partials,
 )
-from tablecloth_time_spark.plans.snapshots import SnapshotTable
+from tablecloth_time_spark.plans.snapshots import FrameSource, SnapshotTable
 from tablecloth_time_spark.plans.tier_store import (
     P_DATE,
     ParquetTierStore,
@@ -69,52 +77,16 @@ from tablecloth_time_spark.plans.tier_store import (
 BUCKET = "bucket"
 
 
+def _days(partial: DataFrame) -> list[str]:
+    """The ``p_date`` days a tier partial covers: its dirty partitions."""
+    return [r[0] for r in partial.select(partition_date(BUCKET)).distinct().collect()]
+
+
 def manifest_path(root: str) -> str:
     """Canonical location of a continuous aggregate's checkpoint manifest
     under its root dir — the single owner of the filename convention
     (run_pipeline.py's SparkSession-free status mode reads it too)."""
     return os.path.join(root, "manifest.json")
-
-
-def compress_tier(
-    store: TierStore,
-    tier: str,
-    final: DataFrame,
-    value_cols: dict[str, str],
-    key_col: str,
-    dirty: list[str],
-) -> dict:
-    """Encode ``final`` (finalized rows of ``tier`` covering the ``dirty``
-    partitions) into day blocks, write them through ``store.write_blocks``
-    and return the manifest's compression record.
-
-    The encoder runs once: the record is observed on the frame the store
-    writes (``DataFrame.observe``), not computed by a second action."""
-    obs = Observation()
-    blocks = (
-        compress_series(
-            final, ts_col=BUCKET, value_cols=value_cols, key_col=key_col,
-            block_unit="day",
-        )
-        .withColumn(P_DATE, partition_date("block_start"))
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        )
-    )
-    store.write_blocks(tier, blocks)
-    stats = obs.get
-    raw, enc = int(stats["raw"] or 0), int(stats["enc"] or 0)
-    return {
-        "tier": tier,
-        "dirty_partitions": dirty,
-        "n_blocks": int(stats["n_blocks"]),
-        "raw_bytes": raw,
-        "enc_bytes": enc,
-        "compression_ratio": round(raw / enc, 3) if enc else None,
-    }
 
 
 @dataclass(frozen=True)
@@ -145,7 +117,7 @@ class ContinuousAggregate:
     def __init__(
         self,
         spark: SparkSession,
-        source: SnapshotTable,
+        source: SnapshotTable | FrameSource,
         root: str,
         keys: list[str],
         ts_col: str,
@@ -244,23 +216,27 @@ class ContinuousAggregate:
             self._commit_manifest(m)
 
         inc = self.source.read_incremental(last, current)
-        if inc is not None and self.prepare is not None:
+        if inc is None:
+            return self._complete(m, run, current, 0)
+        if self.prepare is not None:
             inc = self.prepare(inc)
-        rows_in = 0 if inc is None else inc.count()
-        # a zero-row increment (no new files, or appended snapshots that
-        # carried no rows) is an operational no-op, not an error: complete
-        # the run and advance the snapshot cursor
-        if rows_in == 0:
-            run["status"] = "completed"
-            run["rows_in"] = 0
-            m["last_snapshot"] = current
-            self._commit_manifest(m)
-            return run
+        # the increment's rows are counted as the cascade caches its finest
+        # partial, not by a scan of their own
+        seen = Observation()
         partials = cascade_partials(
-            inc, self.keys, self.ts_col, self.aggs,
+            inc.observe(seen, F.count(F.lit(1)).alias("rows")),
+            self.keys, self.ts_col, self.aggs,
             {t.name: (t.interval, t.unit) for t in self.tiers}, self.order_cols,
         )
+        finest = self.tiers[0].name
         try:
+            # the first action over the cache: it fills the cache and `seen`
+            finest_days = _days(partials[finest])
+            if not finest_days:
+                # a zero-row increment (appended snapshots that carried no
+                # rows) is an operational no-op, not an error. `seen` is not
+                # read: over an empty input it is never filled.
+                return self._complete(m, run, current, 0)
             for tier in self.tiers:
                 info = run["tiers"].get(tier.name, {})
                 if info.get("status") == "completed":
@@ -273,7 +249,9 @@ class ContinuousAggregate:
                     info["status"] = "completed"
                     self._commit_manifest(m)
                     continue
-                info = self._stage_tier(tier, partials[tier.name], run_id)
+                partial = partials[tier.name]
+                dirty = finest_days if tier.name == finest else _days(partial)
+                info = self._stage_tier(tier, partial, dirty, run_id)
                 info["status"] = "staged"
                 run["tiers"][tier.name] = info
                 self._commit_manifest(m)
@@ -292,8 +270,11 @@ class ContinuousAggregate:
                 self._commit_manifest(m)
         finally:
             # the refresh owns the cascade's cache, whatever ends it
-            partials[self.tiers[0].name].unpersist()
+            partials[finest].unpersist()
+        return self._complete(m, run, current, int(seen.get["rows"]))
 
+    def _complete(self, m: dict, run: dict, current, rows_in: int) -> dict:
+        """Mark ``run`` completed with ``rows_in`` and advance the cursor."""
         run["status"] = "completed"
         run["rows_in"] = rows_in
         m["last_snapshot"] = current
@@ -301,7 +282,7 @@ class ContinuousAggregate:
         return run
 
     def _stage_tier(
-        self, tier: TierSpec, tier_partial: DataFrame, run_id: str
+        self, tier: TierSpec, tier_partial: DataFrame, dirty: list[str], run_id: str
     ) -> dict:
         """Compute the FULL new content of every dirty partition and hand
         it to the store's stage. Staging (expensive, recomputable) is
@@ -310,8 +291,6 @@ class ContinuousAggregate:
         replays the swap — the increment can never be merged into live
         state twice."""
         new_partial = tier_partial.withColumn(P_DATE, partition_date(BUCKET))
-
-        dirty = [r[0] for r in new_partial.select(P_DATE).distinct().collect()]
         if self.store.tier_exists(tier.name):
             old = self.store.read_state(tier.name).filter(
                 F.col(P_DATE).isin(dirty)
@@ -326,14 +305,40 @@ class ContinuousAggregate:
         return self.store.stage(tier.name, merged, dirty, run_id)
 
     def _refresh_blocks(self, run: dict) -> dict:
-        """Recompress the compress-tier's dirty partitions into blocks."""
+        """Encode the compress tier's dirty partitions into day blocks,
+        write them through ``store.write_blocks`` and return the manifest's
+        compression record.
+
+        The encoder runs once: the record is observed on the frame the store
+        writes (``DataFrame.observe``), not computed by a second action."""
         spec = self.compress
         dirty = run["tiers"][spec.tier]["dirty_partitions"]
         state = self.store.read_state(spec.tier).filter(F.col(P_DATE).isin(dirty))
-        return compress_tier(
-            self.store, spec.tier, finalize_partials(state, self.keys, self.aggs),
-            spec.value_cols, self.keys[0], dirty,
+        obs = Observation()
+        blocks = (
+            compress_series(
+                finalize_partials(state, self.keys, self.aggs), ts_col=BUCKET,
+                value_cols=spec.value_cols, key_col=self.keys[0], block_unit="day",
+            )
+            .withColumn(P_DATE, partition_date("block_start"))
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n_blocks"),
+                F.sum("raw_bytes").alias("raw"),
+                F.sum("enc_bytes").alias("enc"),
+            )
         )
+        self.store.write_blocks(spec.tier, blocks)
+        stats = obs.get
+        raw, enc = int(stats["raw"] or 0), int(stats["enc"] or 0)
+        return {
+            "tier": spec.tier,
+            "dirty_partitions": dirty,
+            "n_blocks": int(stats["n_blocks"]),
+            "raw_bytes": raw,
+            "enc_bytes": enc,
+            "compression_ratio": round(raw / enc, 3) if enc else None,
+        }
 
     # -- reads --------------------------------------------------------------
 

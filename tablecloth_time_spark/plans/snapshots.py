@@ -104,3 +104,23 @@ class SnapshotTable:
         if not files:
             return None
         return self.spark.read.parquet(*files)
+
+
+class FrameSource:
+    """A one-snapshot source with ``SnapshotTable``'s read shape: snapshot
+    1 holds ``df``. ``FrameSource(None)`` has no snapshot and touches no
+    files, for a run that never reads its source (retention expiry).
+
+    A full run (``scripts/run_pipeline.py full``) is one refresh over this
+    source into an empty store."""
+
+    def __init__(self, df: DataFrame | None):
+        self.df = df
+
+    def current_snapshot_id(self) -> int | None:
+        return None if self.df is None else 1
+
+    def read_incremental(
+        self, after_snapshot: int | None, until_snapshot: int | None = None
+    ) -> DataFrame | None:
+        return self.df if after_snapshot is None else None

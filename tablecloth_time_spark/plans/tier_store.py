@@ -7,11 +7,11 @@ Consumers never touch paths — proven by :class:`MemoryTierStore`, which has
 no filesystem at all (tests/test_continuous.py runs the full refresh/resume
 suite against it).
 
-The ``p_date`` layout here is the only tier-table layout. A full run
-(``scripts/run_pipeline.py full``) writes through the same ``stage`` /
-``commit`` / ``write_blocks`` calls as a refresh: it stages every partition
-of each finalized tier, then drops the live partitions its output does not
-cover. So ``expire`` drops partitions of either kind of output.
+The ``p_date`` layout here is the only tier-table layout, and a refresh is
+the only writer. A full run (``scripts/run_pipeline.py full``) drops every
+partition of its tiers through ``list_partitions`` / ``drop_partitions``,
+then runs one refresh into the emptied store, so ``expire`` and ``status``
+work on either kind of output.
 
 The protocol is deliberately shaped so a real Iceberg binding is *only*
 the table format's native operations, no engine changes:
@@ -56,8 +56,8 @@ Contract details the engine relies on:
   tier no longer holds.
 - ``write_blocks(tier, blocks)`` must run an action on ``blocks`` before
   it returns: the engine takes the manifest's compression record from
-  metrics observed on that run (``continuous.compress_tier``), and waits
-  for them.
+  metrics observed on that run (``ContinuousAggregate._refresh_blocks``),
+  and waits for them.
 - ``read_state`` / ``read_blocks`` return a frame over the store's state
   as of the call: a commit made since the previous read, by this or any
   other process, shows up on the next one.

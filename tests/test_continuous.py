@@ -614,9 +614,9 @@ def test_failed_stage_leaves_no_cached_partial(spark, tmp_path, batches):
     assert _persistent_rdds(spark) == before
 
 
-def _encoder_rows(spark, fn) -> list[int]:
-    """Rows out of each block-encoder run (the ``MapInPandas`` node) in the
-    SQL executions ``fn()`` starts, from the SQL status store."""
+def _node_rows(spark, fn, match) -> list[int]:
+    """Rows out of every plan node ``match(node)`` accepts, in the SQL
+    executions ``fn()`` starts, from the SQL status store."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
     sql = spark._jsparkSession.sharedState().statusStore()
 
@@ -632,13 +632,35 @@ def _encoder_rows(spark, fn) -> list[int]:
         values = sql.executionMetrics(eid)
         nodes = sql.planGraph(eid).allNodes()
         for node in (nodes.apply(i) for i in range(nodes.size())):
-            if node.name() != "MapInPandas":
+            if not match(node):
                 continue
             metrics = node.metrics()
             for m in (metrics.apply(i) for i in range(metrics.size())):
                 if m.name() == "number of output rows":
                     rows.append(int(values.get(m.accumulatorId()).get().replace(",", "")))
     return rows
+
+
+def _encoder_rows(spark, fn) -> list[int]:
+    """Rows out of each block-encoder run (the ``MapInPandas`` node)."""
+    return _node_rows(spark, fn, lambda node: node.name() == "MapInPandas")
+
+
+def test_refresh_reads_increment_once(spark, tmp_path, batches):
+    """A refresh reads its increment's files in one Spark query: ``rows_in``
+    is observed on the scan that fills the cascade's cache, not counted by
+    a scan of its own. Into an empty store the increment is the only
+    Parquet input, and a scan inside a cached plan that a later query only
+    reads from reports 0 rows."""
+    df1, _ = batches
+    src, ca = _make_ca(spark, str(tmp_path / "src"), str(tmp_path / "agg"))
+    src.append(df1)
+    runs = []
+    rows = _node_rows(
+        spark, lambda: runs.append(ca.refresh()),
+        lambda node: node.name().startswith("Scan parquet"),
+    )
+    assert [r for r in rows if r] == [runs[0]["rows_in"]] == [df1.count()]
 
 
 @pytest.fixture(params=["parquet", "memory"])

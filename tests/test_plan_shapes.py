@@ -7,6 +7,8 @@ broadcast strategy still returns correct rows at sf0.01 — and falls over at
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +16,8 @@ from pyspark.sql import functions as F
 from tablecloth_time_spark.operators.rollup import rollup
 from tablecloth_time_spark.operators.similarity import brute_force_topk
 from tablecloth_time_spark.operators.slice import slice_time
+from tablecloth_time_spark.plans.continuous import ContinuousAggregate, TierSpec
+from tablecloth_time_spark.plans.snapshots import FrameSource
 from tests.conftest import executed_plan
 
 SF = "/root/testdata/sf0.001"
@@ -65,16 +69,25 @@ def test_topk_broadcasts_queries_and_never_shuffles_corpus(spark, events):
 
 
 def test_tier_table_bucket_predicate_pushdown(spark, events, tmp_path):
-    tier = rollup(events, ["user_id"], "ts", 1, "hour", {"n": ("count", "event_id")})
-    path = str(tmp_path / "tier")
-    (
-        tier.repartitionByRange(4, "bucket")
-        .sortWithinPartitions("bucket", "user_id")
-        .write.parquet(path)
+    """A slice of a tier a refresh wrote prunes ``p_date`` partitions, and
+    its ``bucket`` predicate is pushed to the Parquet reader. The pushed
+    ``bucket`` filter skips no file or row group: the engine writes
+    ``bucket`` as INT96, into which Spark pushes no filter, so only the
+    ``p_date`` prune cuts the read (PLANS.md, tier tables row)."""
+    ca = ContinuousAggregate(
+        spark, FrameSource(events), str(tmp_path / "agg"), ["user_id"], "ts",
+        {"n": ("count", "event_id")}, tiers=(TierSpec("hour", 1, "hour"),),
+        order_cols=["ts", "event_id"],
     )
+    ca.refresh()
     p = executed_plan(
-        spark.read.parquet(path).filter("bucket >= timestamp'2024-01-20 00:00:00'")
+        ca.store.read_state("hour").filter(
+            "p_date >= '2024-01-20' AND bucket >= timestamp'2024-01-20 00:00:00'"
+        )
     )
+    assert re.search(
+        r"PartitionFilters: \[isnotnull\(p_date#\d+\), \(p_date#\d+ >= 2024-01-20\)\]", p
+    ), p
     assert "PushedFilters: [IsNotNull(bucket), GreaterThanOrEqual(bucket" in p
 
 

@@ -52,7 +52,6 @@ def test_spark_submit_full_pipeline(spark, transcripts_df, tmp_path):
             "--output", out_dir,
             "--tiers", "minute,hour,day",
             "--compress-tier", "minute",
-            "--salt", "4",
         ],
         capture_output=True,
         text=True,
@@ -66,29 +65,24 @@ def test_spark_submit_full_pipeline(spark, transcripts_df, tmp_path):
     assert set(report["tiers"]) == {"minute", "hour", "day"}
     assert report["compression"]["compression_ratio"] is not None
 
-    # written tiers equal the in-process cascade bit-for-bit
-    from tablecloth_time_spark.operators.rollup import rollup
+    # written tiers, read as the finalized view of their stored partials,
+    # equal the in-process rollup bit-for-bit
+    from scripts.run_pipeline import DEFAULT_AGGS
+    from tablecloth_time_spark.operators.rollup import finalize_partials, rollup
+    from tablecloth_time_spark.plans.tier_store import ParquetTierStore
 
+    store = ParquetTierStore(spark, out_dir)
     batch = transcripts_df.withColumn("text_len", F.length("text").cast("long"))
     for tier, (iv, unit) in {"minute": (1, "minute"), "day": (1, "day")}.items():
         got = (
-            spark.read.parquet(f"{out_dir}/tiers/{tier}")
-            .drop("p_date")
+            finalize_partials(store.read_state(tier), ["conv_id"], DEFAULT_AGGS)
             .toPandas()
             .sort_values(["conv_id", "bucket"], kind="stable")
             .reset_index(drop=True)
         )
         exp = (
             rollup(
-                batch, ["conv_id"], "ts", iv, unit,
-                {
-                    "n_turns": ("count", "turn_idx"),
-                    "sum_chars": ("sum", "text_len"),
-                    "min_turn": ("min", "turn_idx"),
-                    "max_turn": ("max", "turn_idx"),
-                    "first_role": ("first", "role"),
-                    "last_role": ("last", "role"),
-                },
+                batch, ["conv_id"], "ts", iv, unit, DEFAULT_AGGS,
                 order_cols=["ts", "turn_idx"],
             )
             .toPandas()
